@@ -8,7 +8,7 @@ shared or cached across pieces):
   media_strip - decode + media_dedup_features + strip_media_boilerplate
   assemble    - exploded spans -> assemble_doc_text
   labeled     - assemble + quality/repetition flags (the pre-dedup chain,
-                up to and including the _truncate_lineage cut)
+                up to and including the curation_labeled cut)
   pairs       - labeled -> survivors -> minhash pairs (band self-join)
   cc          - pairs -> symmetric edges -> connected_components (stats
                 recorded: iterations, checks)
@@ -74,35 +74,15 @@ def main() -> None:
 
     def _labeled():
         exploded, _ = build_exploded()
-        docs = (
-            T.assemble_doc_text(exploded)
-            .withColumn("source", F.lit("interleaved"))
-            .withColumn("pre_reason", F.when(T.quality_flag_col(), "quality"))
-        )
-        lab = docs.withColumn(
-            "pre_reason",
-            F.coalesce(
-                F.col("pre_reason"), F.when(T.repetition_flag_col(), "repetition")
-            ),
-        )
-        return T._truncate_lineage(
-            lab.select("doc_id", "source", "text", "pre_reason")
+        return T.curation_labeled(
+            T.assemble_doc_text(exploded).withColumn("source", F.lit("interleaved"))
         )
 
     def piece_labeled():
         return _labeled()
 
     def _edges():
-        labeled = _labeled()
-        surv = labeled.filter(F.col("pre_reason").isNull()).select("doc_id", "text")
-        pairs = (
-            T._minhash_pairs(surv)
-            .filter(F.col("shared_bands") >= 2)
-            .select("doc_a", "doc_b")
-        )
-        return pairs.unionByName(
-            pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        )
+        return T.curation_edges(_labeled())
 
     def piece_pairs():
         return _edges()

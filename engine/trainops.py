@@ -19,7 +19,10 @@ the pair-finding then has real positives to find on both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import threading
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -384,39 +387,73 @@ def dedup_simhash(spark, sf_dir):
 # completely different evaluation strategy arriving at the same labels.
 
 CHECKPOINT_DIR_CONF = "spark.extraction.checkpointDir"
+_CHECKPOINT_DIR_LOCK = threading.Lock()
 
 
-def _reliable_checkpoint(df: DataFrame) -> DataFrame:
-    """checkpoint(eager=True), with the persist-first variant REJECTED by
-    measurement: Spark's reliable checkpoint recomputes the lineage in the
-    file-write job (localCheckpoint doesn't), and the textbook remedy —
-    persist before checkpoint, unpersist after — was tried here and made the
-    curation job 1.9× SLOWER (10k-doc corpus, pinned 8 cores, checkpoint dir
-    set: wall 11.2 → 21.6 s, task-time 46.3 → 68.8 s).  Columnar cache
-    encode of wide text frames costs more than recomputing two n-gram
-    groupBys; same conclusion as run_extraction's persist=False default for
-    the decoded spine.  Recompute-on-write stands as the cheaper side of the
-    trade at every scale tested."""
-    return df.checkpoint(eager=True)
+class LineageCut(NamedTuple):
+    """An eager materialization and the handle that releases exactly it."""
+
+    df: DataFrame
+    release: Callable[[], None]
 
 
-def _truncate_lineage(df: DataFrame) -> DataFrame:
-    """Materialize a frame that sits at a DAG-diamond fork so each downstream
-    consumer reads the result instead of recomputing the shared subtree per
-    action.  Reliable checkpoint when a checkpoint dir is configured (same
-    ``spark.extraction.checkpointDir`` discipline as connected_components —
-    the 100 TB mode, where executor loss must not invalidate the cut);
-    localCheckpoint only as the dir-less local-run fallback.  Used instead of
-    persist(): a cached frame leaks executor memory past the query's
-    lifetime when the callee can't know when consumers finish."""
-    sc = df.sparkSession.sparkContext
+def _lineage_cut(df: DataFrame) -> LineageCut:
+    """Materialize ``df`` eagerly — the engine's one way to cut lineage.
+
+    Used at DAG-diamond forks (each downstream consumer reads the result
+    instead of recomputing the shared subtree per action) and by the CC
+    loop.  Used instead of persist(): a cached frame leaks executor memory
+    past the query's lifetime when the callee can't know when consumers
+    finish.
+
+    Reliable ``checkpoint(eager=True)`` when a checkpoint dir is available
+    (``sc.setCheckpointDir`` or the ``spark.extraction.checkpointDir``
+    conf): localCheckpoint blocks are executor-local and die with the
+    executor, which on a 1000-executor run is a near-certainty.
+    localCheckpoint only as the dir-less local-run fallback.
+
+    ``release`` frees this cut and nothing else.  Its handle is read from
+    the returned frame itself — the analyzed plan is the ``LogicalRDD``
+    over the materialized RDD — so persists and checkpoints made
+    concurrently elsewhere in the session are never touched.  Reliable: the
+    RDD's ``rdd-N`` checkpoint directory is deleted through the Hadoop FS
+    API (Spark's cleaner only removes checkpoint files on driver-side RDD
+    GC, and only with ``spark.cleaner.referenceTracking.cleanCheckpoints``).
+    Local: the RDD's blocks are unpersisted.  Call it only once no plan
+    will read the frame again."""
+    spark = df.sparkSession
+    sc = spark.sparkContext
+    with _CHECKPOINT_DIR_LOCK:  # cuts run from worker threads too
+        if sc.getCheckpointDir() is None:
+            conf_dir = spark.conf.get(CHECKPOINT_DIR_CONF, None)
+            if conf_dir:
+                sc.setCheckpointDir(conf_dir)
     if sc.getCheckpointDir() is None:
-        conf_dir = df.sparkSession.conf.get(CHECKPOINT_DIR_CONF, None)
-        if conf_dir:
-            sc.setCheckpointDir(conf_dir)
-    if sc.getCheckpointDir() is not None:
-        return _reliable_checkpoint(df)
-    return df.localCheckpoint(eager=True)
+        out = df.localCheckpoint(eager=True)
+    else:
+        # No persist-before-checkpoint, REJECTED by measurement: the
+        # reliable checkpoint recomputes the lineage in its file-write job
+        # (localCheckpoint doesn't), and the textbook remedy — persist
+        # first, unpersist after — made the curation job 1.9× SLOWER
+        # (10k-doc corpus, pinned 8 cores: wall 11.2 → 21.6 s, task-time
+        # 46.3 → 68.8 s).  Columnar cache encode of wide text frames costs
+        # more than recomputing two n-gram groupBys.
+        out = df.checkpoint(eager=True)
+    rdd = out._jdf.queryExecution().analyzed().rdd()
+    ckpt_file = rdd.getCheckpointFile()
+
+    def release() -> None:
+        if ckpt_file.isDefined():
+            jpath = sc._jvm.org.apache.hadoop.fs.Path(ckpt_file.get())
+            jpath.getFileSystem(sc._jsc.hadoopConfiguration()).delete(jpath, True)
+        else:
+            rdd.unpersist(False)
+
+    return LineageCut(out, release)
+
+
+def _no_release() -> None:
+    """The release of a cut whose ownership moved elsewhere."""
 
 
 def connected_components(
@@ -430,18 +467,21 @@ def connected_components(
 
     Scale discipline (the 100 TB concerns, addressed explicitly):
 
-    - **Lineage truncation is a RELIABLE checkpoint** when a checkpoint dir
-      is available (``sc.setCheckpointDir`` or the
-      ``spark.extraction.checkpointDir`` conf) — localCheckpoint blocks are
-      executor-local and die with the executor, which on a 1000-executor run
-      of a 15-round loop is a near-certainty; falls back to localCheckpoint
-      only in dir-less local runs.  Superseded materializations are released
-      EITHER way: checkpoint files are deleted through the Hadoop FS API,
-      and superseded localCheckpoint blocks are unpersisted by RDD id — a
-      long loop must not accumulate O(convergence-checks) cached copies in
-      executor storage memory (storage steals from the unified region and
-      shrinks execution memory for every later stage in the session; the r5
-      leak left ~4 blocks per CC run behind).
+    - **Lineage truncation is ``_lineage_cut``**: a RELIABLE checkpoint
+      when a checkpoint dir is available, localCheckpoint only in dir-less
+      local runs.  Superseded materializations are released EITHER way, each
+      through the handle its own cut returned (checkpoint files deleted,
+      localCheckpoint blocks unpersisted) — a long loop must not accumulate
+      O(convergence-checks) copies on durable storage or in executor
+      storage memory (storage steals from the unified region and shrinks
+      execution memory for every later stage in the session; the r5 leak
+      left ~4 blocks per CC run behind).  Only the returned frame's own
+      materialization survives the call.
+    - **No session conf is set**, and ownership is never inferred from
+      session-wide listings, so planning, persists and checkpoints in
+      other threads of the same session run unaffected while CC is in
+      flight.  The loop's tiny stages rely on AQE partition coalescing
+      (measured 1.8× WORSE with AQE off).
     - **Driver round-trips run at a cadence**, not per iteration: each
       ``check_every``-iteration window costs one eager checkpoint job + one
       convergence-test job instead of two jobs per iteration.
@@ -482,7 +522,7 @@ def connected_components(
       with contraction for the log-diameter bound.  It is NOT run from
       iteration 1 because the common LSH duplicate-cluster graph is
       clique-shaped (diameter ≤ check_every): measured interleaved A/B at
-      sf0.1 (bench/ab_cc.py), unconditional jumping made dedup_components
+      sf0.1 (BENCH/ab_cc_r5.json), unconditional jumping made dedup_components
       0.78× — two extra narrow shuffles per iteration bought nothing when
       the fixpoint already lands inside the first window.  Labels are
       always doc_ids present in the current graph (init = self, min
@@ -491,61 +531,6 @@ def connected_components(
       returning silently-wrong partial labels for a component whose graph
       diameter exceeds the iteration cap.
     """
-    spark = edges.sparkSession
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        conf_dir = spark.conf.get(CHECKPOINT_DIR_CONF, None)
-        if conf_dir:
-            sc.setCheckpointDir(conf_dir)
-    reliable = sc.getCheckpointDir() is not None
-
-    # Superseded materializations are released EXPLICITLY, in both modes.
-    # Reliable: Spark\'s cleaner only removes checkpoint files on driver-side
-    # RDD GC (and only with spark.cleaner.referenceTracking.cleanCheckpoints
-    # =true), so a long loop at the 100 TB scale this targets would
-    # otherwise accumulate O(convergence-checks) full table copies on
-    # durable storage.  Each truncate diffs the app-private checkpoint dir
-    # (setCheckpointDir appends a per-app UUID, so the listing is ours
-    # alone) to learn which rdd-* directory the checkpoint created; when a
-    # newer checkpoint supersedes it, the old directory is removed through
-    # the Hadoop FileSystem API (works for file://, hdfs://, s3a:// alike).
-    # Local: localCheckpoint persists the RDD in executor storage memory and
-    # nothing unpersists it until driver-side GC happens to collect the
-    # wrapper — the same diff-and-release discipline applies to the
-    # persistent-RDD id set instead of the dir listing.
-    def _fs_path(p: str):
-        jpath = sc._jvm.org.apache.hadoop.fs.Path(p)
-        return jpath.getFileSystem(sc._jsc.hadoopConfiguration()), jpath
-
-    def _list_ckpt() -> set:
-        fs, jpath = _fs_path(sc.getCheckpointDir())
-        if not fs.exists(jpath):
-            return set()
-        return {st.getPath().toString() for st in fs.listStatus(jpath)}
-
-    def _persistent_ids() -> set:
-        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
-
-    def _delete(handles: set) -> None:
-        if reliable:
-            for p in handles:
-                fs, jpath = _fs_path(p)
-                fs.delete(jpath, True)
-        else:
-            jmap = sc._jsc.getPersistentRDDs()
-            for rid in handles:
-                jrdd = jmap.get(rid)
-                if jrdd is not None:
-                    jrdd.unpersist(False)
-
-    def truncate(df: DataFrame) -> tuple[DataFrame, set]:
-        if not reliable:
-            before = _persistent_ids()
-            out = df.localCheckpoint(eager=True)
-            return out, _persistent_ids() - before
-        before = _list_ckpt()
-        out = _reliable_checkpoint(df)
-        return out, _list_ckpt() - before
 
     def with_self_loops(e: DataFrame) -> DataFrame:
         # self-loops make min-over-neighbors include the node\'s own label,
@@ -572,113 +557,97 @@ def connected_components(
             .withColumn("comp", F.col("doc_id"))
         )
 
-    edges, edges_files = truncate(with_self_loops(edges))
-    # Scope the loop's shuffle width to the MATERIALIZED edge count (the
-    # count is one cheap job over the checkpoint): CC rows are two slim id
-    # columns, so the session's payload-sized shuffle width leaves dozens
-    # of near-empty reducers per iteration and the per-stage scheduling
-    # overhead dominates the loop (measured at sf0.1/32c on the capstone
-    # graph: 5.7 s at 64 partitions -> 3.4 s at 1, identical labels).
-    # ~500k edge rows (~25-50 MB) per partition per guide §2.2, capped at
-    # the session default so cluster-scale graphs keep full parallelism;
-    # AQE stays ON (measured 1.8x WORSE without it — its coalescing is
-    # where the tiny-stage savings come from at any width).
-    session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_edges = edges.count()
-    loop_width = min(session_width, max(1, n_edges // 500_000 + 1))
+    edges, release_edges = _lineage_cut(with_self_loops(edges))
+    reliable = edges.sparkSession.sparkContext.getCheckpointDir() is not None
     comp = init_labels(edges)  # lazy: a distinct folded into window 1's plan
-    prev_files: set = set()
+    release_prev = _no_release
     mapping = None  # original doc_id -> current-graph node, once contracted
-    mapping_files: set = set()
+    release_mapping = _no_release
     iterations = checks = contractions = 0
     converged = False
     jump = False
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_width))
-    try:
-        for it in range(1, max_iterations + 1):
-            # fused propagate: self-loops put the node\'s own label in the min
-            comp = _nb_min(edges, comp).select(
-                F.col("doc_a").alias("doc_id"), F.col("nb_comp").alias("comp")
+    for it in range(1, max_iterations + 1):
+        # fused propagate: self-loops put the node\'s own label in the min
+        comp = _nb_min(edges, comp).select(
+            F.col("doc_a").alias("doc_id"), F.col("nb_comp").alias("comp")
+        )
+        if jump:
+            # pointer jump: adopt my label\'s own label when smaller
+            ptr = comp.select(
+                F.col("doc_id").alias("p_id"), F.col("comp").alias("p_comp")
             )
-            if jump:
-                # pointer jump: adopt my label\'s own label when smaller
-                ptr = comp.select(
-                    F.col("doc_id").alias("p_id"), F.col("comp").alias("p_comp")
+            comp = (
+                comp.alias("c")
+                .join(ptr, F.col("c.comp") == F.col("p_id"), "left")
+                .select(
+                    F.col("c.doc_id").alias("doc_id"),
+                    F.least(
+                        F.col("c.comp"), F.coalesce(F.col("p_comp"), F.col("c.comp"))
+                    ).alias("comp"),
                 )
-                comp = (
-                    comp.alias("c")
-                    .join(ptr, F.col("c.comp") == F.col("p_id"), "left")
+            )
+        iterations = it
+        if it % check_every == 0 or it == max_iterations:
+            comp, release_comp = _lineage_cut(comp)
+            checks += 1
+            # fixpoint test on the materialized labels: any doc a neighbor
+            # still improves?  (counts only the improving rows — the join is
+            # inner on doc_a, the filter prunes at the probe side)
+            cur = comp.select(
+                F.col("doc_id").alias("fx_id"), F.col("comp").alias("fx_comp")
+            )
+            improving = (
+                _nb_min(edges, comp)
+                .join(cur, F.col("doc_a") == F.col("fx_id"))
+                .filter(F.col("nb_comp") < F.col("fx_comp"))
+                .count()
+            )
+            # the previous window\'s cut is now superseded — the new comp is
+            # fully materialized and nothing references the old one
+            release_prev()
+            release_prev = release_comp
+            if improving == 0:
+                converged = True
+                break
+            # still propagating past a full window: assume a deep graph —
+            # engage log-diameter stepping AND contract the graph
+            jump = True
+            if it == max_iterations:
+                continue  # cap reached; fall through to the raise
+            contractions += 1
+            la = comp.select(F.col("doc_id").alias("a_id"), F.col("comp").alias("la"))
+            lb = comp.select(F.col("doc_id").alias("b_id"), F.col("comp").alias("lb"))
+            contracted = (
+                edges.join(la, edges["doc_a"] == F.col("a_id"))
+                .join(lb, edges["doc_b"] == F.col("b_id"))
+                .filter(F.col("la") != F.col("lb"))
+                .select(F.col("la").alias("doc_a"), F.col("lb").alias("doc_b"))
+                .distinct()
+            )
+            edges_new, release_edges_new = _lineage_cut(with_self_loops(contracted))
+            # compose the original->current mapping (the just-materialized
+            # labels move DOWN a level: they name the contracted nodes)
+            if mapping is None:
+                mapping, release_mapping = comp, release_comp
+                release_prev = _no_release  # ownership moved to mapping
+            else:
+                relab = comp.select(
+                    F.col("doc_id").alias("m_id"), F.col("comp").alias("m_comp")
+                )
+                new_map, release_new_map = _lineage_cut(
+                    mapping.join(relab, mapping["comp"] == F.col("m_id"), "left")
                     .select(
-                        F.col("c.doc_id").alias("doc_id"),
-                        F.least(
-                            F.col("c.comp"), F.coalesce(F.col("p_comp"), F.col("c.comp"))
-                        ).alias("comp"),
+                        "doc_id",
+                        F.coalesce(F.col("m_comp"), F.col("comp")).alias("comp"),
                     )
                 )
-            iterations = it
-            if it % check_every == 0 or it == max_iterations:
-                comp, comp_files = truncate(comp)
-                checks += 1
-                # fixpoint test on the materialized labels: any doc a neighbor
-                # still improves?  (counts only the improving rows — the join is
-                # inner on doc_a, the filter prunes at the probe side)
-                cur = comp.select(
-                    F.col("doc_id").alias("fx_id"), F.col("comp").alias("fx_comp")
-                )
-                improving = (
-                    _nb_min(edges, comp)
-                    .join(cur, F.col("doc_a") == F.col("fx_id"))
-                    .filter(F.col("nb_comp") < F.col("fx_comp"))
-                    .count()
-                )
-                # the previous window\'s checkpoint is now superseded — the new
-                # comp is fully materialized and nothing references the old files
-                _delete(prev_files)
-                prev_files = comp_files
-                if improving == 0:
-                    converged = True
-                    break
-                # still propagating past a full window: assume a deep graph —
-                # engage log-diameter stepping AND contract the graph
-                jump = True
-                if it == max_iterations:
-                    continue  # cap reached; fall through to the raise
-                contractions += 1
-                la = comp.select(F.col("doc_id").alias("a_id"), F.col("comp").alias("la"))
-                lb = comp.select(F.col("doc_id").alias("b_id"), F.col("comp").alias("lb"))
-                contracted = (
-                    edges.join(la, edges["doc_a"] == F.col("a_id"))
-                    .join(lb, edges["doc_b"] == F.col("b_id"))
-                    .filter(F.col("la") != F.col("lb"))
-                    .select(F.col("la").alias("doc_a"), F.col("lb").alias("doc_b"))
-                    .distinct()
-                )
-                edges_new, edges_new_files = truncate(with_self_loops(contracted))
-                # compose the original->current mapping (the just-materialized
-                # labels move DOWN a level: they name the contracted nodes)
-                if mapping is None:
-                    mapping, mapping_files = comp, comp_files
-                    prev_files = set()  # ownership moved to mapping; keep files
-                else:
-                    relab = comp.select(
-                        F.col("doc_id").alias("m_id"), F.col("comp").alias("m_comp")
-                    )
-                    new_map, new_map_files = truncate(
-                        mapping.join(relab, mapping["comp"] == F.col("m_id"), "left")
-                        .select(
-                            "doc_id",
-                            F.coalesce(F.col("m_comp"), F.col("comp")).alias("comp"),
-                        )
-                    )
-                    _delete(mapping_files)
-                    mapping, mapping_files = new_map, new_map_files
-                _delete(edges_files)
-                edges, edges_files = edges_new, edges_new_files
-                comp = init_labels(edges)  # lazy, as at loop start
-                _delete(prev_files)
-                prev_files = set()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(session_width))
+                release_mapping()
+                mapping, release_mapping = new_map, release_new_map
+            release_edges()
+            edges, release_edges = edges_new, release_edges_new
+            comp = init_labels(edges)  # lazy, as at loop start
+            release_prev()
+            release_prev = _no_release
     if stats is not None:
         stats.update(
             iterations=iterations,
@@ -700,16 +669,16 @@ def connected_components(
         relab = comp.select(
             F.col("doc_id").alias("m_id"), F.col("comp").alias("m_comp")
         )
-        comp, final_files = truncate(
+        comp = _lineage_cut(
             mapping.join(relab, mapping["comp"] == F.col("m_id"), "left").select(
                 "doc_id", F.coalesce(F.col("m_comp"), F.col("comp")).alias("comp")
             )
-        )
-        _delete(mapping_files)
-        _delete(prev_files)
-    # the returned comp is materialized; the edges checkpoint is no
-    # longer referenced by any surviving plan
-    _delete(edges_files)
+        ).df
+        release_mapping()
+        release_prev()
+    # the returned comp is materialized; the edges cut is no longer
+    # referenced by any surviving plan
+    release_edges()
     return comp
 
 
@@ -805,8 +774,8 @@ def duplicated_spans(docs: DataFrame, k: int = _SUBSTR_K) -> DataFrame:
     # the curation flagship).  ReuseExchange cannot cut this one: column
     # pruning gives the two branches DIFFERENT exchange subtrees (the count
     # branch drops pos), so they never canonicalize equal — materialize the
-    # fork instead, per the engine's _truncate_lineage discipline.
-    g = _truncate_lineage(g)
+    # fork instead, per the engine's _lineage_cut discipline.
+    g = _lineage_cut(g).df
     dup = (
         g.groupBy("gh")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -2074,9 +2043,9 @@ def curation_labeled(aug: DataFrame) -> DataFrame:
     # cut the quality+repetition subtree re-executes once per branch —
     # measured 14.8 → 9.6 s at sf0.1/32c from this truncate alone
     # (PLANS.md §4j).
-    return _truncate_lineage(
+    return _lineage_cut(
         labeled.select("doc_id", "source", "text", "pre_reason")
-    )
+    ).df
 
 
 def curation_edges(labeled: DataFrame) -> DataFrame:
@@ -2200,34 +2169,25 @@ def curate_interleaved(
     assembled doc frame (one groupBy), the media chain on payload-free
     feature rows; the final semi-join ships only kept doc_ids.
 
-    The two sides are INDEPENDENT until the final semi-join, and the text
-    side's pre-dedup phases are driver-synchronous (eager label and edge
-    checkpoints), so the media verdicts are materialized from a driver-side
-    worker thread WHILE the label+edge phases run (guide §2.6 — overlap
-    independent jobs so one job's tiny stages back-fill the other's idle
-    cores).  The worker's materialization is BARRIERED (``fut.result()``)
-    before connected_components starts, because the CC loop narrows the
-    session's shuffle width for its own tiny stages — concurrent planning
-    during that window would pick up the narrowed width (a corpus-wide
-    media window planned at a small-graph width is the pathological case
-    at scale).  The materialized frames are slim: the per-ref verdict
-    table (media_ref, n_refs, canonical_ref, is_boilerplate — no
-    payloads, no text) and the symmetric edge list CC would checkpoint
-    anyway.  Measured interleaved A/B at sf0.1/32c: 9.2 → 8.3-8.6 s
-    best-of-3, identical rows."""
+    The two sides are INDEPENDENT until the final semi-join, so the media
+    verdicts are materialized from a driver-side worker thread WHILE the
+    text side's driver-synchronous phases run — the eager label cut and
+    every CC window (guide §2.6: overlap independent jobs so one job's tiny
+    stages back-fill the other's idle cores).  Nothing in the text chain
+    touches session state, so the media jobs may plan at any point of it;
+    the worker is joined only before the strip that consumes its result.
+    The media frame is slim: the per-ref verdict table (media_ref, n_refs,
+    canonical_ref, is_boilerplate — no payloads, no text).  The LSH edge
+    list goes to connected_components lazily, so its first cut is the only
+    materialization of the edges."""
     from concurrent.futures import ThreadPoolExecutor
 
-    assembled = assemble_doc_text(exploded).withColumn(
-        "source", F.lit("interleaved")
-    )
     with ThreadPoolExecutor(max_workers=1) as pool:
         groups_fut = pool.submit(
-            lambda: _truncate_lineage(media_dedup_features(blob_feats, min_refs))
+            lambda: _lineage_cut(media_dedup_features(blob_feats, min_refs)).df
         )
-        labeled = curation_labeled(assembled)  # eager (default width)
-        edges = _truncate_lineage(curation_edges(labeled))  # eager, heavy chain
-        groups = groups_fut.result()  # barrier: nothing plans during CC below
-    outcomes = curation_verdicts(labeled, connected_components(edges))
+        outcomes = interleaved_outcomes(exploded)  # eager through CC
+        groups = groups_fut.result()
     stripped = strip_media_boilerplate(exploded, groups)
     kept = outcomes.filter(F.col("outcome") == "kept").select("doc_id")
     return stripped.join(kept, "doc_id", "semi")
@@ -2907,9 +2867,9 @@ def curate_incremental(
     )
     # same DAG-diamond cut as _curation_outcomes: labeled feeds both the
     # dedup branch and the final outcome join (PLANS.md §4j)
-    labeled = _truncate_lineage(
+    labeled = _lineage_cut(
         labeled.select("doc_id", "source", "text", "pre_reason")
-    )
+    ).df
     surv = labeled.filter(F.col("pre_reason").isNull()).select("doc_id", "text")
     verd = dedup_incremental(corpus_sigs, surv, min_bands=min_bands)
     return labeled.join(verd, "doc_id", "left").select(
@@ -3253,9 +3213,9 @@ def dedup_semdedup(spark, sf_dir):
     cosine tau, dup_of = the smallest such vec.
 
     The assignment frame sits at a DAG-diamond fork (both pair sides + the
-    final verdict join), so it is materialized once via _truncate_lineage
+    final verdict join), so it is materialized once via _lineage_cut
     instead of re-running the k-means fit three times."""
-    a2 = _truncate_lineage(kmeans_assign(_emb(spark, sf_dir)))
+    a2 = _lineage_cut(kmeans_assign(_emb(spark, sf_dir))).df
     dups = semdedup_dups(a2)
     return a2.join(dups, "vec_id", "left").select(
         "vec_id",
@@ -3508,12 +3468,12 @@ def train_corpus_semantic_filtered(spark, sf_dir):
     )
     # DAG diamond: `labeled` feeds the survivor semi-join AND the final
     # outcome rollup — truncate once (same rationale as curation_outcomes).
-    labeled = _truncate_lineage(labeled.select("doc_id", "source", "pre_reason"))
+    labeled = _lineage_cut(labeled.select("doc_id", "source", "pre_reason")).df
     surv = labeled.filter(F.col("pre_reason").isNull()).select(
         F.col("doc_id").alias("vec_id")
     )
     emb_surv = _emb(spark, sf_dir).join(surv, "vec_id", "semi")
-    assigned = _truncate_lineage(kmeans_assign(emb_surv))
+    assigned = _lineage_cut(kmeans_assign(emb_surv)).df
     dups = semdedup_dups(assigned).select(
         "vec_id", F.lit(True).alias("sem_dup")
     )
@@ -3865,7 +3825,7 @@ def train_corpus_dsir_outcomes(spark, sf_dir, k: int = 200) -> DataFrame:
     distort every weight), and the scoring stage then runs on the smallest
     possible frame.  The outcome frame is lineage-truncated at its DAG fork
     (it feeds the raw-sample fit, the scoring pass, and the final rollup)."""
-    out = _truncate_lineage(_curation_outcomes(spark, sf_dir))
+    out = _lineage_cut(_curation_outcomes(spark, sf_dir)).df
     target = (
         _augmented(spark, sf_dir)
         .filter(F.col("doc_id") % 23 == 1)
@@ -4244,6 +4204,15 @@ def _lm_pair_keys():
     )
 
 
+def _avg_cost() -> Column:
+    """``lm_cost // n_pairs`` in exact integers, as the DuckDB oracles
+    compute it.  Spark's ``div`` truncates toward zero, and ``floor(/)``
+    floors a double, which rounds once ``lm_cost`` passes 2^53; subtracting
+    the non-negative remainder first leaves an exact multiple for ``div``,
+    so the result floors for any sign and magnitude."""
+    return F.expr("(lm_cost - pmod(lm_cost, n_pairs)) div n_pairs")
+
+
 def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
     """Per-doc LM cost + CCNet bucket: fit the hashed-bigram model on
     ``reference`` (two tiny groupBys → the A/C weight tables), score every
@@ -4290,11 +4259,7 @@ def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
             F.sum(F.col("a_w") - F.coalesce(F.col("c_w"), F.lit(0))).alias("lm_cost"),
         )
     )
-    # floor division, not `div`: Spark's `div` truncates toward zero while
-    # the DuckDB oracles use `//` (floors) — identical for lm_cost ≥ 0 (the
-    # documented invariant), but sign-agnostic arithmetic keeps oracle
-    # parity even in the >~4e7-tokens-per-bucket stray −1 regime (ADVICE r5)
-    avg = F.floor(F.col("lm_cost") / F.col("n_pairs")).cast("long")
+    avg = _avg_cost()
     return (
         corpus.select("doc_id", "source")
         .join(costs, "doc_id", "left")
@@ -4401,14 +4366,14 @@ def train_corpus_ccnet_outcomes(spark, sf_dir) -> DataFrame:
     d = _augmented(spark, sf_dir).select("doc_id", "source", "text")
     fp = d.withColumn("f", F.md5("text"))
     canon = fp.groupBy("f").agg(F.min("doc_id").alias("canon_id"))
-    lab = _truncate_lineage(
+    lab = _lineage_cut(
         fp.join(canon, "f").select(
             "doc_id",
             "source",
             "text",
             (F.col("doc_id") != F.col("canon_id")).alias("is_dup"),
         )
-    )
+    ).df
     surv = lab.filter(~F.col("is_dup")).select("doc_id", "source", "text")
     ppl = lm_perplexity(surv, surv.filter(F.col("doc_id") % 31 == 3)).select(
         "doc_id", "ppl_bucket"
@@ -4517,9 +4482,9 @@ def dsir_select_threshold(
     Same total order (resample_key DESC, doc_id ASC), same result set as
     dsir_select (differential test); the scored frame is lineage-truncated
     since both passes read it."""
-    scored = _truncate_lineage(
+    scored = _lineage_cut(
         dsir_score(corpus, dsir_weights(spark, target, raw_sample))
-    )
+    ).df
     bucketed = scored.withColumn("kb", F.expr(f"resample_key div {bucket_width}"))
     hist = sorted(
         (
@@ -4839,11 +4804,7 @@ def lm_perplexity_grouped(
             F.sum(F.col("a_w") - F.coalesce(F.col("c_w"), F.lit(0))).alias("lm_cost"),
         )
     )
-    # floor division, not `div`: Spark's `div` truncates toward zero while
-    # the DuckDB oracles use `//` (floors) — identical for lm_cost ≥ 0 (the
-    # documented invariant), but sign-agnostic arithmetic keeps oracle
-    # parity even in the >~4e7-tokens-per-bucket stray −1 regime (ADVICE r5)
-    avg = F.floor(F.col("lm_cost") / F.col("n_pairs")).cast("long")
+    avg = _avg_cost()
     return (
         corpus.select("doc_id", "source", F.col(group_col))
         .join(costs, "doc_id", "left")
@@ -4996,11 +4957,7 @@ def lm_perplexity_maps(docs: DataFrame, weight_maps: DataFrame) -> DataFrame:
         F.size(F.split(F.col("text"), " ")) - F.lit(1), F.lit(0)
     )
     n_pairs = F.when(n_pairs_raw >= 1, n_pairs_raw)
-    # floor division, not `div`: Spark's `div` truncates toward zero while
-    # the DuckDB oracles use `//` (floors) — identical for lm_cost ≥ 0 (the
-    # documented invariant), but sign-agnostic arithmetic keeps oracle
-    # parity even in the >~4e7-tokens-per-bucket stray −1 regime (ADVICE r5)
-    avg = F.floor(F.col("lm_cost") / F.col("n_pairs")).cast("long")
+    avg = _avg_cost()
     return (
         docs.crossJoin(F.broadcast(weight_maps))
         .select(

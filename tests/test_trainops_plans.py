@@ -151,34 +151,78 @@ def test_connected_components_contraction_differential(spark, tmp_path):
     assert stats["converged"] and stats["contractions"] >= 1
 
 
+def _dirless(spark):
+    """Force the dir-less (localCheckpoint) branch on the shared session —
+    an earlier test may have set a checkpoint dir (scala: checkpointDir =
+    None); test-only seam.  Returns the SparkContext."""
+    sc = spark.sparkContext
+    if sc.getCheckpointDir() is not None:
+        scala_none = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(scala_none)
+        assert sc.getCheckpointDir() is None
+    return sc
+
+
+def _persistent_ids(sc) -> set:
+    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+
+
 def test_connected_components_releases_local_checkpoint_blocks(spark):
     """Dir-less (localCheckpoint) mode must not leak superseded blocks into
     executor storage memory: after the loop returns, only the surviving
     materialization(s) the returned frame depends on may remain persisted
     (r5 leaked ~4 blocks per run; over a 3-repeat 17-query bench that
     accumulation squeezed execution memory for every later query)."""
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is not None:
-        # an earlier test set a dir on the shared session; force the
-        # dir-less branch (scala: checkpointDir = None) — test-only seam
-        scala_none = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(scala_none)
-        assert sc.getCheckpointDir() is None
-
-    def persistent_ids():
-        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
-
-    before = persistent_ids()
+    sc = _dirless(spark)
+    before = _persistent_ids(sc)
     stats: dict = {}
     comp = trainops.connected_components(
         _chain_edges(spark, 40), max_iterations=24, stats=stats
     )
-    leaked = persistent_ids() - before
+    leaked = _persistent_ids(sc) - before
     # exactly the returned frame's own materialization survives
     assert len(leaked) <= 1, f"superseded localCheckpoint blocks leaked: {leaked}"
     assert stats["contractions"] >= 1  # the deep chain exercised every path
     assert comp.count() == 40
     comp._jdf  # keep the frame alive until after the assertion
+
+
+def test_connected_components_keeps_concurrent_persists(spark):
+    """Release ownership comes from each cut's own frame, not from a
+    session-wide before/after diff: RDDs another thread persists while a
+    dir-less CC call runs must all still be persisted afterwards."""
+    import threading
+
+    sc = _dirless(spark)
+    stop = threading.Event()
+    persisted: list = []
+
+    def persist_loop():
+        while not stop.is_set():
+            rdd = sc.parallelize(range(8), 1).persist()
+            rdd.count()
+            persisted.append(rdd)
+
+    worker = threading.Thread(target=persist_loop)
+    worker.start()
+    try:
+        stats: dict = {}
+        comp = trainops.connected_components(
+            _chain_edges(spark, 40), max_iterations=24, stats=stats
+        )
+        assert comp.count() == 40
+    finally:
+        stop.set()
+        worker.join(timeout=60)
+    assert not worker.is_alive()
+    assert stats["contractions"] >= 1  # every release path ran
+    assert persisted, "the persisting thread never got a turn"
+    gone = {r.id() for r in persisted} - _persistent_ids(sc)
+    try:
+        assert not gone, f"CC released RDDs it does not own: {sorted(gone)}"
+    finally:
+        for r in persisted:
+            r.unpersist()
 
 
 def test_connected_components_raises_instead_of_partial_labels(spark):
@@ -864,11 +908,10 @@ def test_decode_blobs_distinct_matches_row_path(spark):
     assert distinct_path["logo-3"]["title_text"] == "كشف تفاصيل الخدمات"
 
 
-def test_curate_interleaved_drops_docs_whole_and_strips_media(spark):
-    """Hand-built interleaved corpus: a doc dropped by the TEXT chain loses
-    ALL its spans (even media whose group survives the strip); a kept doc
-    keeps offset-complete text spans plus its canonicalized media span; a
-    kept doc whose media is boilerplate keeps only text."""
+def _interleaved_inputs(spark):
+    """Hand-built interleaved corpus → (exploded spans, decoded blob
+    features): dA kept with content media, dB quality-dropped, dC kept with
+    boilerplate media."""
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
     from engine.bitmap import encode_bitmap_page
@@ -924,7 +967,20 @@ def test_curate_interleaved_drops_docs_whole_and_strips_media(spark):
         ],
         blob_schema,
     )
-    out = trainops.curate_interleaved(spans, decode_blobs(blobs)).collect()
+    return spans, decode_blobs(blobs)
+
+
+def test_curate_interleaved_drops_docs_whole_and_strips_media(spark):
+    """Hand-built interleaved corpus: a doc dropped by the TEXT chain loses
+    ALL its spans (even media whose group survives the strip); a kept doc
+    keeps offset-complete text spans plus its canonicalized media span; a
+    kept doc whose media is boilerplate keeps only text.  Only the
+    materializations the result reads stay persisted: labeled, the media
+    groups and CC's returned comp."""
+    sc = spark.sparkContext
+    before = _persistent_ids(sc)
+    out = trainops.curate_interleaved(*_interleaved_inputs(spark)).collect()
+    assert len(_persistent_ids(sc) - before) <= 3
     by_doc: dict = {}
     for r in out:
         by_doc.setdefault(r["doc_id"], []).append((r["kind"], r["media_ref"], r["offset"]))
@@ -933,12 +989,31 @@ def test_curate_interleaved_drops_docs_whole_and_strips_media(spark):
     assert sorted(by_doc["dC"]) == [("text", None, 0)]  # media was boilerplate
 
 
+def test_cc_and_curate_interleaved_never_set_session_conf(spark, monkeypatch):
+    """Neither connected_components nor curate_interleaved may mutate
+    session-global conf: other threads plan against the same session while
+    they run."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls: list = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        calls.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    trainops.connected_components(_chain_edges(spark, 12)).collect()
+    trainops.curate_interleaved(*_interleaved_inputs(spark)).collect()
+    assert calls == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
 def test_semdedup_plan_pair_join_is_cluster_equi(spark):
     """SemDeDup's within-cell pairing must be an equi-join on the cluster id
     (SortMergeJoin/ShuffledHashJoin), never an all-pairs shape.  The k-means
     ASSIGNMENT's k-row broadcast cross pass is by design (each point must
     score every centroid — same precedent as sim_cosine_topk's 1-row query
-    crossJoin), and it sits behind the _truncate_lineage cut anyway, so the
+    crossJoin), and it sits behind the _lineage_cut cut anyway, so the
     verdict plan itself must be BNLJ-free too."""
     plan = (
         trainops.dedup_semdedup(spark, SF_DIR)
@@ -1400,3 +1475,13 @@ def test_lm_maps_form_matches_join_form(spark):
     plan = maps_form._jdf.queryExecution().executedPlan().toString()
     # doc side: no hash exchange (the tiny map-fit subtree has its own)
     assert "Exchange hashpartitioning(doc_id" not in plan
+
+
+def test_avg_cost_floors_exactly_like_python(spark):
+    """avg_cost = lm_cost // n_pairs must floor in exact integers, as the
+    DuckDB oracles' ``//`` does: past 2^53 a double division rounds, and
+    for a negative cost truncation toward zero is off by one."""
+    rows = [(2**53 + 1, 1), (2**53 + 1, 3), (-7, 2), (-(2**53) - 3, 2), (9, 3)]
+    d = spark.createDataFrame(rows, "lm_cost: long, n_pairs: long")
+    got = [r["a"] for r in d.select(trainops._avg_cost().alias("a")).collect()]
+    assert got == [c // n for c, n in rows]

@@ -8,10 +8,17 @@ crashed batch can restart from files (/root/reference/app/tasks.py:444-466,
 - ``materialize_run``: write the span spine ONCE (the \"interim\" checkpoint),
   then derive spans_out / lineage / metrics / conf_hist / run_totals from the
   written copy — one pass over the expensive branches regardless of how many
-  outputs are read.  Derivation is INCREMENTAL: each run's outputs come from
-  that run's spine only and land in per-run output directories, mirroring the
-  reference's per-PDF interim files (tasks.py:444-466) — an incremental run
-  costs O(new docs), not O(total history).  On a cluster each directory tree
+  outputs are read.  The derived writes are independent jobs over the
+  written spine, so ``write_committed`` submits them together from a driver
+  thread pool: at receipts scale each is a handful of small stages whose
+  floor is scheduling and parquet commit, not compute, and run one after
+  another they leave most cores idle.  The returned frames are read back
+  with the derived frames' own schemas — parquet inference would cost one
+  footer-reading job per output.  Derivation is INCREMENTAL: each run's
+  outputs come from that run's spine only and land in per-run output
+  directories, mirroring the reference's per-PDF interim files
+  (tasks.py:444-466) — an incremental run costs O(new docs), not O(total
+  history).  On a cluster each directory tree
   is an Iceberg table (``writeTo(...).append()``), snapshot expiry replaces
   the retention job, and MERGE replaces the heal step (ICEBERG.md); local
   parquet keeps the layout identical.
@@ -32,7 +39,9 @@ crashed batch can restart from files (/root/reference/app/tasks.py:444-466,
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from engine.assemble import reassemble
@@ -48,6 +57,43 @@ def spine_path(out_dir: str) -> str:
 
 def _is_committed(path: str) -> bool:
     return os.path.isfile(os.path.join(path, "_SUCCESS"))
+
+
+def _require_committed(path: str, what: str) -> None:
+    """Without commit markers every output would read as "missing" forever
+    and each invocation would silently re-derive the history."""
+    if not _is_committed(path):
+        raise RuntimeError(
+            f"{what} to {path} produced no _SUCCESS marker — resume "
+            "requires commit markers; do not disable "
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+        )
+
+
+def write_committed(writes: dict[str, DataFrame]) -> None:
+    """Overwrite each ``path: frame`` as parquet, all at once, and require
+    each path's _SUCCESS marker.
+
+    One driver thread per write submits its job; the executors still share
+    the same cores, so this overlaps the writes' scheduling and commit
+    latency and lets one job's small stages fill the cores another leaves
+    idle.  Each thread inherits the caller's job description and tags.
+    Every write runs to completion before the first failure (in ``writes``
+    order) is raised, so the outputs that did commit keep their markers and
+    a retry re-derives only the failed ones."""
+    if not writes:
+        return
+    session = next(iter(writes.values())).sparkSession
+
+    @inheritable_thread_target(session)
+    def write_one(path: str, df: DataFrame) -> None:
+        df.write.mode("overwrite").parquet(path)
+        _require_committed(path, "derived write")
+
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = [pool.submit(write_one, path, df) for path, df in writes.items()]
+    for f in futures:  # all settled when the pool shut down
+        f.result()
 
 
 def _run_subdir(out_dir: str, table: str, run_id: str) -> str:
@@ -196,6 +242,13 @@ def materialize_run(
     as-is (re-derived from their spine only if a previous crash left them
     missing).  The returned frames are the union over all committed runs.
 
+    A run's missing outputs are written concurrently (``write_committed``);
+    if one fails, the others still commit and the first failure is raised
+    after all have settled, so the next call re-derives only the failed
+    output.  The union is read back with the schemas of this run's
+    ``derive_outputs`` frames, not by parquet inference, which would run one
+    footer-reading job per output.
+
     ``bucket_spine=N`` writes the spine CLUSTERED BY doc_id INTO N buckets
     (Spark-native bucketing; the executable analogue of the Iceberg
     ``bucket(doc_id)`` spine DDL in ICEBERG.md): every derived consumer
@@ -233,12 +286,7 @@ def materialize_run(
         )
     else:
         spine_df.write.mode("overwrite").parquet(own)
-    if not _is_committed(own):
-        raise RuntimeError(
-            f"spine write to {own} produced no _SUCCESS marker — resume "
-            "requires commit markers; do not disable "
-            "mapreduce.fileoutputcommitter.marksuccessfuljobs"
-        )
+    _require_committed(own, "spine write")
 
     # Derive THIS run's outputs from THIS run's spine only (O(new docs));
     # heal any older run whose derived outputs went missing after its spine
@@ -256,20 +304,14 @@ def materialize_run(
             derived = derive_outputs(
                 _read_spine(spark, sdir, rid, bool(bucket_spine)), rid
             )
-            for name in missing:
-                dpath = _run_subdir(out_dir, name, rid)
-                derived[name].write.mode("overwrite").parquet(dpath)
-                if not _is_committed(dpath):
-                    # same contract as the spine write above: without markers
-                    # every derived output would read as "missing" forever and
-                    # each invocation would silently re-derive the history
-                    raise RuntimeError(
-                        f"derived write to {dpath} produced no _SUCCESS marker "
-                        "— resume requires commit markers; do not disable "
-                        "mapreduce.fileoutputcommitter.marksuccessfuljobs"
-                    )
+            write_committed(
+                {_run_subdir(out_dir, name, rid): derived[name] for name in missing}
+            )
+            if sdir == own:
+                schemas = {name: df.schema for name, df in derived.items()}
         for name in OUTPUT_NAMES:
             out_dirs[name].append(_run_subdir(out_dir, name, rid))
     return {
-        name: spark.read.parquet(*dirs) for name, dirs in out_dirs.items()
+        name: spark.read.schema(schemas[name]).parquet(*dirs)
+        for name, dirs in out_dirs.items()
     }

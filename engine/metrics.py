@@ -9,8 +9,9 @@ Redis pub/sub (notifications.py:19-29).  Here:
   the invariant `count(lineage) == sum(size(spans))` is test-asserted;
 - metrics: per-partition rollup + OCR-confidence histogram (A6) in one pass
   (grouping by (partition, conf_bucket) then summing gives both tables from a
-  single shuffle at real scale; we keep two small aggs for clarity since both
-  read the same cached spine);
+  single shuffle at real scale; we keep two small aggs for clarity — each
+  scans the spine materialize_run wrote to parquet, and the two writes run
+  concurrently);
 - observe(): named accumulators on the output DataFrame so a driver/listener
   can read counts without a second pass.
 """

@@ -407,13 +407,24 @@ def extract_documents(
     ``modes`` is (doc_id, mode) — typically doc_modes(result.spine); docs
     without a row (all-skipped or text-only) fall back to ``default_mode``
     (the reference's route-level template default).
+
+    The projected (doc_id, text) frame is hash-partitioned on doc_id once,
+    before any per-doc work: extract_sections' window, its groupBys and the
+    doc_id joins then reuse that partitioning instead of each adding an
+    exchange, and the table and header regex stages run on one task per
+    partition rather than on however few splits spans_out was read in.  The
+    width is the session's ``spark.sql.shuffle.partitions``, given
+    explicitly: AQE coalesces a count-less repartition back toward one
+    partition at receipts scale, and the modes side is shuffled at that
+    width too, so the join needs no exchange on the text side.
     """
+    width = int(spans_out.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     joined = spans_out.select(
         "doc_id",
         F.array_join(
             F.transform("spans_out", lambda s: F.coalesce(s["text"], F.lit(""))), "\n"
         ).alias("text"),
-    )
+    ).repartition(width, "doc_id")
     if modes is not None:
         joined = joined.join(modes, "doc_id", "left")
     else:

@@ -60,6 +60,12 @@ def get_spark(
         # shuffle); smaller splits keep the Arrow-UDF stage parallel even for
         # modest inputs.  At cluster scale this is the per-executor knob too.
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
+        # One receipts op (materialize_run + extract_documents) generates
+        # ~120 distinct classes, more than the default 100-entry codegen
+        # cache holds, so LRU eviction made every repeat of the op recompile
+        # ~100 classes (1.5-2.4 s of janino per op on a 4-core host); with
+        # room for them a repeated op compiles none.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if os.environ.get("SPARK_GRAFT_PIN_HEAP") == "1":
         # Pin the heap (-Xms == -Xmx) and pre-touch it: without this, G1

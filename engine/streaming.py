@@ -17,7 +17,6 @@ foreachBatch — no logic is duplicated for the streaming case.
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,7 +29,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from engine.io import derive_outputs
+from engine.io import derive_outputs, write_committed
 from engine.pipeline import build_spine
 from engine.schema import SPAN_STRUCT, SPANS_SCHEMA
 
@@ -319,16 +318,13 @@ def stream_extraction(
         the stream the same durable interim checkpoint (S4) the batch path
         has.
 
-        The four derived writes are independent jobs over the just-written
-        spine; submitting them from a driver-side thread pool overlaps their
-        scheduler/commit latency (each is a small job at micro-batch scale,
-        so the floor is submission + parquet commit, not compute) — the
-        standard Spark concurrent-jobs idiom.  Threads only submit; executors
-        still share the same cores, so batch-scale throughput is unchanged
-        while the per-micro-batch fixed cost shrinks.  Interleaved A/B (pool
-        vs sequential alternating in one process, 8 micro-batches): pool
-        wins every paired round — 1.19× best / 1.11× median wall
-        (BENCH/ab_stream_r5.json)."""
+        The four derived writes go through io.write_committed, the same
+        concurrent committed writer materialize_run uses: each is a small
+        job at micro-batch scale, so overlapping their scheduler/commit
+        latency shrinks the per-micro-batch fixed cost, and each batch dir
+        must carry its _SUCCESS marker.  Interleaved A/B (pool vs sequential
+        alternating in one process, 8 micro-batches): pool wins every paired
+        round — 1.19× best / 1.11× median wall (BENCH/ab_stream_r5.json)."""
         session = batch_df.sparkSession
         spine_dir = os.path.join(out_dir, "spine", f"batch={batch_id}")
         build_spine(session, batch_df, blobs).write.mode("overwrite").parquet(
@@ -336,19 +332,12 @@ def stream_extraction(
         )
         spine = session.read.parquet(spine_dir)
         outputs = derive_outputs(spine, run_id)
-
-        def write_one(name: str) -> None:
-            outputs[name].write.mode("overwrite").parquet(
-                os.path.join(out_dir, name, f"batch={batch_id}")
-            )
-
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futures = [
-                pool.submit(write_one, n)
-                for n in ("spans_out", "lineage", "metrics", "conf_hist")
-            ]
-            for f in futures:
-                f.result()  # surface the first failure, don't swallow it
+        write_committed(
+            {
+                os.path.join(out_dir, name, f"batch={batch_id}"): outputs[name]
+                for name in ("spans_out", "lineage", "metrics", "conf_hist")
+            }
+        )
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -2179,13 +2179,18 @@ def curate_interleaved(
     The media frame is slim: the per-ref verdict table (media_ref, n_refs,
     canonical_ref, is_boilerplate — no payloads, no text).  The LSH edge
     list goes to connected_components lazily, so its first cut is the only
-    materialization of the edges."""
+    materialization of the edges.  The worker inherits the caller's job
+    description and tags, so its jobs trace to the same op."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    @inheritable_thread_target(blob_feats.sparkSession)
+    def media_groups() -> DataFrame:
+        return _lineage_cut(media_dedup_features(blob_feats, min_refs)).df
+
     with ThreadPoolExecutor(max_workers=1) as pool:
-        groups_fut = pool.submit(
-            lambda: _lineage_cut(media_dedup_features(blob_feats, min_refs)).df
-        )
+        groups_fut = pool.submit(media_groups)
         outcomes = interleaved_outcomes(exploded)  # eager through CC
         groups = groups_fut.result()
     stripped = strip_media_boilerplate(exploded, groups)

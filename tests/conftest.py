@@ -34,3 +34,33 @@ def corpus_dfs(spark, corpus):
     spans = spark.createDataFrame(spans_rows, SPANS_SCHEMA)
     blobs = spark.createDataFrame(blob_rows, MEDIA_BLOBS_SCHEMA)
     return spans, blobs
+
+
+@pytest.fixture
+def job_descriptions(spark):
+    """``run(fn)`` calls ``fn`` under a job description and returns the
+    description of every job submitted meanwhile (None for a job that lost
+    it, e.g. one submitted from a thread that did not inherit it)."""
+    jsc = spark.sparkContext._jsc.sc()
+    store = jsc.statusStore()
+
+    def jobs():
+        listed = store.jobsList(None)
+        return [listed.apply(i) for i in range(listed.size())]
+
+    def run(fn) -> list:
+        jsc.listenerBus().waitUntilEmpty(30_000)
+        mark = max((j.jobId() for j in jobs()), default=-1)
+        spark.sparkContext.setJobDescription("described-op")
+        try:
+            fn()
+        finally:
+            spark.sparkContext.setJobDescription(None)
+        jsc.listenerBus().waitUntilEmpty(30_000)
+        return [
+            j.description().get() if j.description().isDefined() else None
+            for j in jobs()
+            if j.jobId() > mark
+        ]
+
+    return run

@@ -277,3 +277,102 @@ def test_bucketed_spine_heals_without_catalog(spark, corpus, tmp_path):
         spark, spans, blobs, out, run_id="hb2", bucket_spine=4
     )
     assert r2["spans_out"].count() == n
+
+
+def test_derived_write_failure_keeps_other_outputs_and_heals_alone(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """One derived output failing at write time (the writes run
+    concurrently) is raised only after the others settled: those four
+    commit, the failed one carries no marker, and the next call re-derives
+    that output alone."""
+    import os
+
+    import pytest
+
+    import engine.io as io
+
+    real_derive, real_write = io.derive_outputs, io.write_committed
+
+    def derive_failing_metrics(spine, run_id):
+        outs = real_derive(spine, run_id)
+        outs["metrics"] = outs["metrics"].withColumn(
+            "boom", F.raise_error(F.lit("metrics write failed"))
+        )
+        return outs
+
+    out = str(tmp_path / "run-fail")
+    spans1, blobs = _corpus_half(spark, corpus, 0, 30)
+    monkeypatch.setattr(io, "derive_outputs", derive_failing_metrics)
+    with pytest.raises(Exception, match="metrics write failed"):
+        materialize_run(spark, spans1, blobs, out, run_id="r1")
+    committed = {
+        name: os.path.isfile(os.path.join(out, name, "run=r1", "_SUCCESS"))
+        for name in io.OUTPUT_NAMES
+    }
+    assert committed == {name: name != "metrics" for name in io.OUTPUT_NAMES}
+
+    written: list[str] = []
+
+    def spy(writes):
+        written.extend(writes)
+        return real_write(writes)
+
+    monkeypatch.setattr(io, "derive_outputs", real_derive)
+    monkeypatch.setattr(io, "write_committed", spy)
+    spans_all, _ = _corpus_half(spark, corpus, 0, 60)
+    r2 = materialize_run(spark, spans_all, blobs, out, run_id="r2")
+    assert [p for p in written if "run=r1" in p] == [
+        os.path.join(out, "metrics", "run=r1")
+    ]
+    assert sorted(p for p in written if "run=r2" in p) == sorted(
+        os.path.join(out, name, "run=r2") for name in io.OUTPUT_NAMES
+    )
+    assert r2["metrics"].select("run_id").distinct().count() == 2
+    total_spans = sum(len(r["spans"]) for r in corpus[0])
+    assert r2["lineage"].count() == total_spans
+
+
+def test_materialize_run_jobs_keep_the_job_description(
+    spark, corpus, tmp_path, job_descriptions
+):
+    """Every job materialize_run submits — the derived writes run from
+    pool threads — carries the caller's job description."""
+    spans, blobs = _corpus_half(spark, corpus, 0, 30)
+    outs = {}
+
+    def op():
+        outs.update(materialize_run(spark, spans, blobs, str(tmp_path / "d"), run_id="d1"))
+        outs["run_totals"].collect()
+
+    described = job_descriptions(op)
+    assert len(described) >= len(outs) + 1  # spine + every derived write
+    assert set(described) == {"described-op"}
+
+
+def test_repeated_receipts_op_compiles_no_new_code(spark, corpus, tmp_path):
+    """materialize_run + extract_documents generate more classes than
+    Spark's default 100-entry codegen cache holds; the session keeps them
+    all, so repeating the op recompiles (almost) nothing.  With the default
+    cache a repeat recompiled ~90 classes; a few plans AQE settles
+    differently from run to run can still compile a handful."""
+    from engine.io import committed_spine_dirs
+    from engine.parse import doc_modes, extract_documents
+    from engine.schema import SPINE_DDL
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    spans, blobs = _corpus_half(spark, corpus, 0, 60)
+
+    def op(i: int) -> int:
+        out = str(tmp_path / f"op{i}")
+        before = compiles.getCount()
+        outs = materialize_run(spark, spans, blobs, out, run_id=f"op{i}")
+        spine = spark.read.schema(SPINE_DDL).parquet(*committed_spine_dirs(out))
+        extract_documents(outs["spans_out"], doc_modes(spine)).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        outs["run_totals"].collect()
+        return compiles.getCount() - before
+
+    op(0)
+    assert op(1) <= 30

@@ -332,3 +332,36 @@ def test_parse_header_medicine_third_variant(spark):
     assert got["insurer_name"] == "شركة الضمان"
     assert got["ward"] == "الجناح الشرقي"
     assert got["room_type"] == "مفردة"
+
+
+def test_extract_documents_same_rows_for_any_input_partitioning(
+    spark, corpus_dfs, tmp_path
+):
+    """extract_documents spreads its (doc_id, text) projection by doc_id
+    once: the rows do not depend on how spans_out arrives partitioned, and
+    every per-doc window, groupBy and join reuses that spread — no
+    ENSURE_REQUIREMENTS exchange is left when modes is None."""
+    import json
+
+    from engine.pipeline import run_extraction
+
+    res = run_extraction(spark, *corpus_dfs, run_id="t-spread")
+    res.spine.write.parquet(str(tmp_path / "spine"))
+    res.spans_out.write.parquet(str(tmp_path / "spans_out"))
+    spine = spark.read.parquet(str(tmp_path / "spine"))
+    spans_out = spark.read.parquet(str(tmp_path / "spans_out"))
+    modes = parse.doc_modes(spine)
+
+    def rows(df):
+        out = parse.extract_documents(df, modes).collect()
+        return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in out)
+
+    one, seven = rows(spans_out.coalesce(1)), rows(spans_out.repartition(7))
+    assert one == seven
+    multi_table = [r for r in one if len(json.loads(r)["sections"] or []) >= 2]
+    assert multi_table, "fixture corpus lost its multi-table docs"
+
+    plan = (
+        parse.extract_documents(spans_out)._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "ENSURE_REQUIREMENTS" not in plan, plan

@@ -1485,3 +1485,12 @@ def test_avg_cost_floors_exactly_like_python(spark):
     d = spark.createDataFrame(rows, "lm_cost: long, n_pairs: long")
     got = [r["a"] for r in d.select(trainops._avg_cost().alias("a")).collect()]
     assert got == [c // n for c, n in rows]
+
+
+def test_curate_interleaved_jobs_keep_the_job_description(spark, job_descriptions):
+    """The media worker thread inherits the caller's job description, so
+    every curate_interleaved job traces to the op that ran it."""
+    inputs = _interleaved_inputs(spark)
+    described = job_descriptions(lambda: trainops.curate_interleaved(*inputs).collect())
+    assert described
+    assert set(described) == {"described-op"}

@@ -32,33 +32,17 @@ def _kept_span() -> object:
     )
 
 
-def reassemble(spine: DataFrame, salt_partials: int = 0) -> DataFrame:
+def reassemble(spine: DataFrame) -> DataFrame:
     """spine(doc_id, offset, kind, media_ref, out_text, status) →
     spans_out(doc_id, spans_out array<struct<kind,text,media_ref,offset>>).
 
-    ``salt_partials > 0`` switches to salted two-phase aggregation for
-    doc-level skew (north_rule: a pathological document with millions of
-    spans would otherwise pin one reducer): phase 1 groups by
-    (doc_id, pmod(hash(offset), salt)) building partial arrays map-side,
-    phase 2 merges per doc with flatten + one final array_sort.  Same output
-    either way (order comes from the sort, not the grouping) — test-asserted.
-    AQE skew-split handles moderate skew without this; the salt is for the
-    heavy tail.
+    One hash aggregation on doc_id; ``array_sort`` on the offset-first
+    struct restores order, so the output does not depend on how the spine
+    is partitioned.
     """
-    from engine.skew import salt_col
-
-    kept_span = _kept_span()
-    if salt_partials > 0:
-        partial = spine.groupBy(
-            "doc_id", salt_col(salt_partials, "offset").alias("_salt")
-        ).agg(F.collect_list(kept_span).alias("_part"))
-        nested = partial.groupBy("doc_id").agg(
-            F.array_sort(F.flatten(F.collect_list("_part"))).alias("_ordered")
-        )
-    else:
-        nested = spine.groupBy("doc_id").agg(
-            F.array_sort(F.collect_list(kept_span)).alias("_ordered")
-        )
+    nested = spine.groupBy("doc_id").agg(
+        F.array_sort(F.collect_list(_kept_span())).alias("_ordered")
+    )
     # array_sort on a struct orders by the first field (offset) — then
     # re-project to the output contract's field order (kind, text, media_ref, offset).
     return nested.select(

@@ -11,7 +11,7 @@ Fixture-design requirements covered:
   completions, /root/reference/app/core/document/pdf_processor.py:1208-1258);
 - ~60/40 text/media mix, 5-40 spans/doc;
 - a skewed tail: every ``skew_every``-th doc gets one oversized media payload
-  (100-1000× median) to exercise the salting policy;
+  (100-1000× median) to exercise payload-size skew at the blobs scan;
 - a small rate of corrupt payloads (decode-error lineage path, X3);
 - page kinds covering every router branch incl. all skip reasons (P3-P8);
 - text spans mixing content, boilerplate, bidi noise, consecutive dup

@@ -272,8 +272,9 @@ def refresh_pq_codes_sql(codes_view: str = "pq_codes_new", catalog: str = "lake"
 
 
 def weight_tables_ddl(catalog: str = "lake") -> list[str]:
-    """The model-as-data artifacts the quality/selection scorers join
-    against — a learned fastText/LR table (quality_model_score_join), DSIR
+    """The model-as-data artifacts the quality/selection scorers read —
+    the slot for a learned fastText/LR (bucket → weight) table (the engine
+    itself scores quality with the closed-form quality_model_score), DSIR
     per-domain log-ratio weights (dsir_weights / dsir_scores_multi), and
     the CCNet LM's unigram/bigram tables (lm_perplexity) all ship as
     (key → integer weight) rows.  Tiny (≤ 64k rows each, bigrams bounded

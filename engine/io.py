@@ -44,9 +44,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
-from engine.assemble import reassemble
-from engine.metrics import conf_histogram_df, lineage_df, metrics_df, run_totals_df
-from engine.pipeline import build_spine
+from engine.pipeline import build_spine, derive_outputs
 
 OUTPUT_NAMES = ("spans_out", "lineage", "metrics", "conf_hist", "run_totals")
 
@@ -201,27 +199,12 @@ def _read_spine(
     return spark.read.schema(SPINE_DDL).parquet(sdir)
 
 
-def derive_outputs(spine: DataFrame, run_id: str) -> dict[str, DataFrame]:
-    """All derived output tables for ONE run, computed from that run's spine
-    only.  Runs are disjoint by doc_id (the resume anti-join guarantees it),
-    so per-run spans_out partitions union into the complete table without
-    any cross-run aggregation."""
-    return {
-        "spans_out": reassemble(spine),
-        "lineage": lineage_df(spine, run_id),
-        "metrics": metrics_df(spine, run_id),
-        "conf_hist": conf_histogram_df(spine, run_id),
-        "run_totals": run_totals_df(spine, run_id),
-    }
-
-
 def materialize_run(
     spark: SparkSession,
     spans: DataFrame,
     blobs: DataFrame,
     out_dir: str,
     run_id: str,
-    resume: bool = True,
     bucket_spine: int | None = None,
 ) -> dict[str, DataFrame]:
     """Run the pipeline with a durable spine checkpoint; returns the output
@@ -259,9 +242,7 @@ def materialize_run(
     bucket ≈ one task's worth of spans; N must stay fixed across runs so
     cross-run unions stay co-clustered."""
     own = _run_subdir(out_dir, "spine", run_id)
-    committed = (
-        [d for d in committed_spine_dirs(out_dir) if d != own] if resume else []
-    )
+    committed = [d for d in committed_spine_dirs(out_dir) if d != own]
     todo = spans
     if committed:
         from engine.schema import SPINE_DDL

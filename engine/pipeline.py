@@ -23,7 +23,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from engine import textops
 from engine.assemble import reassemble
@@ -37,13 +36,6 @@ from engine.metrics import (
 )
 from engine.routing import route
 
-# Conf key selecting salted two-phase reassembly for mega-document skew
-# (spans-per-doc heavy tail).  0 = plain single-phase aggregation; N > 0 =
-# N-way salted partials (assemble.reassemble).  A deployment sets this from
-# its corpus stats (e.g. if spans-per-doc p99 exceeds the rows one reducer
-# should hold) without code edits.
-SALT_PARTIALS_CONF = "spark.extraction.saltPartials"
-
 
 @dataclass
 class ExtractionResult:
@@ -55,9 +47,6 @@ class ExtractionResult:
     run_id: str
     observation: object = field(default=None)
     run_totals: DataFrame = field(default=None)
-
-    def unpersist(self) -> None:
-        self.spine.unpersist()
 
 
 def _row_local_branch(ex: DataFrame) -> DataFrame:
@@ -213,44 +202,37 @@ def build_spine(
     return _row_local_branch(ex).unionByName(_media_branch(ex, blobs))
 
 
+def derive_outputs(spine: DataFrame, run_id: str) -> dict[str, DataFrame]:
+    """All derived output tables for ONE run, computed from that run's spine
+    only.  Runs are disjoint by doc_id (materialize_run's resume anti-join
+    guarantees it), so per-run spans_out partitions union into the complete
+    table without any cross-run aggregation."""
+    return {
+        "spans_out": reassemble(spine),
+        "lineage": lineage_df(spine, run_id),
+        "metrics": metrics_df(spine, run_id),
+        "conf_hist": conf_histogram_df(spine, run_id),
+        "run_totals": run_totals_df(spine, run_id),
+    }
+
+
 def run_extraction(
     spark: SparkSession,
     spans: DataFrame,
     blobs: DataFrame,
     run_id: str | None = None,
-    persist: bool = False,
-    salt_partials: int | None = None,
 ) -> ExtractionResult:
-    """The single public entry: spans + blobs in, three output frames out.
+    """The single public entry: spans + blobs in, the derived output frames
+    out, all lazily planned over one observed spine.
 
-    ``persist=False`` by default: executor-cache writes of the full decoded
-    spine measurably serialize under high core counts (32-thread local bench:
-    ~5× slowdown), and at real scale the right amortization for multi-output
-    consumption is writing the spine ONCE to a checkpoint table and deriving
-    spans_out/lineage/metrics from that (engine.io.materialize_run) — not
-    caching it in executor memory.  Set persist=True only for small
-    interactive runs that read all three outputs ad hoc.
-
-    ``salt_partials``: explicit salt width for the re-nest aggregation, or
-    None to read ``spark.extraction.saltPartials`` from the session conf
-    (default 0 = unsalted) — the mega-document skew path is reachable by
-    configuration, no code edit (see assemble.reassemble; equal output either
-    way, test-asserted).
+    Nothing is cached: executor-cache writes of the full decoded spine
+    measurably serialize under high core counts (32-thread local bench:
+    ~5× slowdown), and the amortization for multi-output consumption is
+    writing the spine ONCE and deriving the outputs from that copy
+    (engine.io.materialize_run).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    if salt_partials is None:
-        salt_partials = int(spark.conf.get(SALT_PARTIALS_CONF, "0"))
-    spine = build_spine(spark, spans, blobs)
-    spine, obs = observed(spine)
-    if persist:
-        spine = spine.persist(StorageLevel.MEMORY_AND_DISK)
+    spine, obs = observed(build_spine(spark, spans, blobs))
     return ExtractionResult(
-        spans_out=reassemble(spine, salt_partials=salt_partials),
-        lineage=lineage_df(spine, run_id),
-        metrics=metrics_df(spine, run_id),
-        conf_hist=conf_histogram_df(spine, run_id),
-        spine=spine,
-        run_id=run_id,
-        observation=obs,
-        run_totals=run_totals_df(spine, run_id),
+        spine=spine, run_id=run_id, observation=obs, **derive_outputs(spine, run_id)
     )

@@ -29,9 +29,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from engine.io import derive_outputs, write_committed
-from engine.pipeline import build_spine
-from engine.schema import SPAN_STRUCT, SPANS_SCHEMA
+from engine.io import write_committed
+from engine.pipeline import build_spine, derive_outputs
+from engine.schema import SPAN_STRUCT, SPANS_SCHEMA, SPINE_DDL
 
 
 FLAT_SPAN_SCHEMA = StructType(
@@ -251,11 +251,10 @@ def stream_quality_model(doc_stream: DataFrame, threshold: int = 0) -> DataFrame
     same INTEGER-exact hashing-trick expression as the batch
     trainops.quality_model_score (row-local — the closed form runs inside
     the stream's scan with no state and no stream-static join), so a doc
-    gets the identical score and verdict at ingest as overnight.  A
-    LEARNED weight table deploys on this path as a stream-static broadcast
-    join against quality_model_weights — same seam as the batch join form
-    (BENCH/ab_model_weights_r5.json), left out here because the closed
-    form is the measured default.  Emits the scored stream with `kept`;
+    gets the identical score and verdict at ingest as overnight.  The
+    closed form is the engine's one quality-scoring form (the broadcast
+    weight-table join it replaced was 3.19× slower,
+    BENCH/ab_model_weights_r5.json).  Emits the scored stream with `kept`;
     filter or route on it downstream."""
     from pyspark.sql import functions as F
 
@@ -309,7 +308,8 @@ def stream_extraction(
         log (on a cluster this is an Iceberg overwrite-by-filter).
 
         The spine is written ONCE per batch and the derived outputs re-read
-        it from parquet — the same amortization as io.materialize_run.
+        it from parquet with SPINE_DDL (no footer-inference job) — the same
+        amortization as io.materialize_run.
         Deriving all four outputs straight off the build_spine frame re-runs
         the whole decode per sink (4×/batch; the r5 streaming bench measured
         39.5 → 20.6 s for an 8-micro-batch drain from this change alone, and
@@ -330,7 +330,7 @@ def stream_extraction(
         build_spine(session, batch_df, blobs).write.mode("overwrite").parquet(
             spine_dir
         )
-        spine = session.read.parquet(spine_dir)
+        spine = session.read.schema(SPINE_DDL).parquet(spine_dir)
         outputs = derive_outputs(spine, run_id)
         write_committed(
             {

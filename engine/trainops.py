@@ -3013,6 +3013,45 @@ def _dot(a, b):
     )
 
 
+def _as_double_emb(emb: DataFrame) -> DataFrame:
+    """(vec_id, emb) with the embedding cast to array<double>."""
+    return emb.select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
+    )
+
+
+def _packed_codebooks(cents: list[DataFrame]) -> DataFrame:
+    """ONE row packing each (cluster, emb) centroid frame as a column
+    cb_i = array<struct<cluster, c>> — the broadcast side of every
+    nearest-centroid argmin (k-means assignment, PQ encode, ADC)."""
+    packed = None
+    for i, c in enumerate(cents):
+        pi = c.agg(
+            F.collect_list(F.struct("cluster", F.col("emb").alias("c"))).alias(
+                f"cb_{i}"
+            )
+        )
+        packed = pi if packed is None else packed.crossJoin(pi)
+    return packed
+
+
+def _nearest_centroid(codebook: Column, x: Column) -> Column:
+    """Cluster id of the centroid in a packed ``codebook`` nearest to ``x``:
+    a row-local array_min over per-centroid (dot(c,c) - 2*dot(x,c), cluster)
+    structs (the ||x||² term is constant per point).  Ties can't reach the
+    struct's array field: cluster ids are unique per codebook, so
+    (s, cluster) already totally orders it."""
+    return F.array_min(
+        F.transform(
+            codebook,
+            lambda ct: F.struct(
+                (_dot(ct["c"], ct["c"]) - F.lit(2.0) * _dot(x, ct["c"])).alias("s"),
+                ct["cluster"].alias("cluster"),
+            ),
+        )
+    )["cluster"]
+
+
 def kmeans_assign(
     emb: DataFrame, k: int = _KMEANS_K, iters: int = _KMEANS_ITERS
 ) -> DataFrame:
@@ -3034,14 +3073,12 @@ def kmeans_fit(
 
     - init: the k smallest vec_ids' embeddings, cluster = rank - 1 (the
       4-row sort/limit/window runs on a k-row frame — not a global window).
-    - assign: argmin over dot(c,c) - 2*dot(x,c) (the ||x||² term is constant
-      per point), ties broken by cluster id; the k centroids enter as ONE
-      broadcast row carrying array<struct<cluster, c>>, and the argmin is a
-      row-local array_min over per-centroid (score, cluster) structs — a
-      ZERO-EXCHANGE map pass over the points (the k× dot-product compute is
-      inherent to k-means assignment; nothing point-sided shuffles for it).
-      Receipts vs the rejected crossJoin→groupBy argmin, which shuffled
-      every point's embedding per iteration: BENCH/ab_kmeans_k_r5.json.
+    - assign: _nearest_centroid against the k centroids packed into ONE
+      broadcast row — a ZERO-EXCHANGE map pass over the points (the k×
+      dot-product compute is inherent to k-means assignment; nothing
+      point-sided shuffles for it).  Receipts vs the rejected
+      crossJoin→groupBy argmin, which shuffled every point's embedding per
+      iteration and forced SortAggregate: BENCH/ab_kmeans_k_r5.json.
     - update: per-dimension mean, ROUNDED to 6 decimals — quantization makes
       the next assignment's operands identical across engines regardless of
       each engine's partial-sum order (doubles agree to ~1e-13; the round
@@ -3054,9 +3091,7 @@ def kmeans_fit(
     assignment step is one broadcast map pass over the corpus — the shape
     SemDeDup-style curation actually runs at scale.
     """
-    e = emb.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
+    e = _as_double_emb(emb)
     w = Window.orderBy("vec_id")
     cents = (
         e.orderBy("vec_id")
@@ -3065,38 +3100,11 @@ def kmeans_fit(
     )
     assigned = None
     for step in range(iters):
-        # ROW-LOCAL argmin: the k centroids are packed into ONE broadcast
-        # row carrying an array<struct<cluster, c>>, and each point takes
-        # array_min over per-centroid (score, cluster) structs — a pure map
-        # pass.  The earlier crossJoin→groupBy(vec_id) form shuffled one
-        # (vec_id, min-struct) row PER POINT — with the embedding inside the
-        # struct, i.e. the whole corpus crossed the wire per iteration — and
-        # min over a struct containing an array forces SortAggregate (plan
-        # receipts + 0.76-0.86× walls at k=4..256 even single-node, where
-        # the shuffle is in-process: BENCH/ab_kmeans_k_r5.json).
-        # Ties can't reach the struct's array field: cluster ids are unique
-        # per packed array, so (s, cluster) already totally orders it.
-        packed = F.broadcast(
-            cents.agg(
-                F.collect_list(
-                    F.struct(F.col("cluster"), F.col("emb").alias("c"))
-                ).alias("cents")
-            )
-        )
-        best = F.array_min(
-            F.transform(
-                F.col("cents"),
-                lambda ct: F.struct(
-                    (
-                        _dot(ct["c"], ct["c"])
-                        - F.lit(2.0) * _dot(F.col("emb"), ct["c"])
-                    ).alias("s"),
-                    ct["cluster"].alias("cluster"),
-                ),
-            )
-        )
+        packed = F.broadcast(_packed_codebooks([cents]))
         assigned = e.crossJoin(packed).select(
-            "vec_id", best["cluster"].alias("cluster"), "emb"
+            "vec_id",
+            _nearest_centroid(F.col("cb_0"), F.col("emb")).alias("cluster"),
+            "emb",
         )
         if step < iters - 1:
             ex = assigned.select("cluster", F.posexplode("emb").alias("pos", "x"))
@@ -3108,6 +3116,20 @@ def kmeans_fit(
                 ).alias("emb")
             )
     return assigned, cents
+
+
+def _nearest_centroid_sql(name: str, points: str, cents: str) -> str:
+    """Oracle twin of _nearest_centroid: CTE ``name`` (vec_id, cluster)
+    assigning each ``points`` (vec_id, emb) row its nearest ``cents``
+    (cluster, emb) centroid, ties to the smaller cluster id."""
+    return f"""{name} AS (
+      SELECT vec_id, cluster FROM (
+        SELECT e.vec_id, c.cluster,
+               row_number() OVER (PARTITION BY e.vec_id
+                 ORDER BY list_dot_product(c.emb, c.emb)
+                          - 2 * list_dot_product(e.emb, c.emb),
+                          c.cluster) AS rn
+        FROM {points} e, {cents} c) WHERE rn = 1)"""
 
 
 def _kmeans_sql_ctes(
@@ -3125,15 +3147,6 @@ def _kmeans_sql_ctes(
     per-subspace slices for PQ (``prefix`` keeps the M chains' CTE names
     disjoint inside one WITH)."""
     p = prefix
-    assign = f"""
-    {p}a{{i}} AS (
-      SELECT vec_id, cluster FROM (
-        SELECT e.vec_id, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_dot_product(c.emb, c.emb)
-                          - 2 * list_dot_product(e.emb, c.emb),
-                          c.cluster) AS rn
-        FROM {p}e e, {{prev}} c) WHERE rn = 1)"""
     update = f"""
     {p}u{{i}} AS (
       SELECT a.cluster, t.i AS pos, round(avg(e.emb[t.i]), 6) AS v
@@ -3151,7 +3164,8 @@ def _kmeans_sql_ctes(
       WHERE rn <= {k})"""
     ]
     for i in range(1, iters + 1):
-        parts.append(assign.format(i=i, prev=f"{p}c{i - 1}"))
+        assign = _nearest_centroid_sql(f"{p}a{i}", f"{p}e", f"{p}c{i - 1}")
+        parts.append("\n    " + assign)
         if i < iters:
             parts.append(update.format(i=i, hi=dims + 1))
     return ",".join(parts)
@@ -3507,10 +3521,12 @@ def train_corpus_semantic_filtered(spark, sf_dir):
 # bucket), per-token weight lookup, integer-exact accumulation, row-local
 # zero-exchange scoring over the corpus scan.  The WEIGHTS are a frozen
 # deterministic stand-in (hash-derived pseudo-weights in [-5000, 5000] cbp —
-# no training corpus exists in this sandbox); a learned fastText/LR model
-# drops in either as this same closed-form expression or as a broadcast
-# (bucket → weight) table joined pre-aggregation, with an identical plan
-# shape.  Scores accumulate as INTEGERS so both engines agree exactly
+# no training corpus exists in this sandbox).  The closed form is the one
+# scoring form: the broadcast (bucket → weight) join form it replaced was
+# 3.19× slower (BENCH/ab_model_weights_r5.json).  A learned fastText/LR
+# table would enter packed into one broadcast map row and score row-locally,
+# as lm_weight_maps/lm_perplexity_maps do for the CCNet LM.
+# Scores accumulate as INTEGERS so both engines agree exactly
 # regardless of summation order (the same determinism discipline as the
 # Knuth-hash samplers; a float mean would differ in ULPs across engines).
 
@@ -3561,55 +3577,6 @@ def text_quality_model(spark, sf_dir):
     return quality_model_score(load(spark, sf_dir, "documents"))
 
 
-def quality_model_weights(spark: SparkSession) -> DataFrame:
-    """The (bucket → weight) table a LEARNED fastText/LR model ships as —
-    65,536 rows (16-bit hashing trick), one integer weight per bucket.
-    Here the weights are the same frozen Knuth-mix pseudo-weights as
-    _model_token_weight, so the join form and the closed form score
-    identically (locked by test_quality_model_join_matches_closed_form);
-    in production this frame is simply replaced by the trained table."""
-    return spark.range(65_536).select(
-        F.col("id").alias("bucket"),
-        ((F.col("id") * F.lit(_KNUTH)) % F.lit(2**32) % F.lit(10_001) - F.lit(5_000))
-        .alias("weight"),
-    )
-
-
-def quality_model_score_join(docs: DataFrame, weights: DataFrame) -> DataFrame:
-    """Broadcast-join form of quality_model_score — the shape a real learned
-    model deploys as (the weight table is model output, not an expression):
-    tokenize → explode → 16-bit bucket → BROADCAST hash join against the
-    65k-row weight table → per-doc integer sum.
-
-    Plan shape vs the closed form: the corpus side stays exchange-free up
-    to the join (explode and bucket are row-local on the scan; the weight
-    table broadcasts), then ONE exchange of (doc_id, partial_sum) rows for
-    the re-aggregation — map-side partial sums mean the shuffle carries one
-    small row per (doc, reducer), not one per token.  A/B receipts:
-    BENCH/ab_model_weights_r5.json."""
-    toks = F.split(F.col("text"), " ")
-    ex = docs.select(
-        "doc_id", "source", F.size(toks).alias("n_tokens"), F.explode(toks).alias("tok")
-    ).select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        F.conv(F.substring(F.md5("tok"), 1, 4), 16, 10).cast("long").alias("bucket"),
-    )
-    return (
-        ex.join(F.broadcast(weights), "bucket")
-        .groupBy("doc_id", "source", "n_tokens")
-        .agg(F.sum("weight").alias("score_sum"))
-        .select(
-            "doc_id",
-            "source",
-            "n_tokens",
-            "score_sum",
-            (F.col("score_sum") > 0).alias("kept"),
-        )
-    )
-
-
 # --- DSIR: data selection with importance resampling -------------------------
 #
 # Xie et al. 2023 (arXiv:2302.03169) — select raw-corpus documents whose
@@ -3644,13 +3611,13 @@ def _dsir_bucket(tok):
     )
 
 
-def _dsir_token_counts(docs: DataFrame) -> DataFrame:
-    """(bucket, c) hashed-token counts over a document frame — the
-    bag-of-hashed-ngrams "model fit" (tiny: ≤ 4096 rows out)."""
+def _dsir_token_counts(docs: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, bucket, c) hashed-token counts over a document frame — the
+    bag-of-hashed-ngrams "model fit" (tiny: ≤ 4096 rows per key out)."""
     return (
-        docs.select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
-        .select(_dsir_bucket(F.col("tok")).alias("bucket"))
-        .groupBy("bucket")
+        docs.select(*keys, F.explode(F.split(F.col("text"), " ")).alias("tok"))
+        .select(*keys, _dsir_bucket(F.col("tok")).alias("bucket"))
+        .groupBy(*keys, "bucket")
         .agg(F.count("*").alias("c"))
     )
 
@@ -3685,18 +3652,32 @@ def dsir_weights(spark: SparkSession, target: DataFrame, raw_sample: DataFrame) 
     )
 
 
-def dsir_score(docs: DataFrame, weights: DataFrame) -> DataFrame:
-    """Per-doc DSIR importance: explode tokens → bucket → BROADCAST join the
-    4096-row weight table → integer per-doc sum (one (doc_id, partial_sum)
-    exchange, map-side combined — the quality_model_score_join plan shape).
-    Adds the deterministic Gumbel resampling key: score + round(1e4 *
-    -ln(-ln(u))) with u the md5-of-string-id uniform (id-type-agnostic)."""
+def _hashed_token_sums(
+    docs: DataFrame, weights: DataFrame, sums: dict[str, str]
+) -> DataFrame:
+    """Per-doc integer sums of hashed-token weights → (doc_id, source,
+    n_tokens, <out>...) for each ``sums`` entry out → weight column:
+    explode tokens → _dsir_bucket → BROADCAST join the (bucket, weights...)
+    table → one (doc_id, partial_sum) exchange, map-side combined.  The
+    weight table carries every bucket, so the join is a pure inner join."""
     toks = F.split(F.col("text"), " ")
     ex = docs.select(
         "doc_id", "source", F.size(toks).alias("n_tokens"), F.explode(toks).alias("tok")
     ).select(
         "doc_id", "source", "n_tokens", _dsir_bucket(F.col("tok")).alias("bucket")
     )
+    return (
+        ex.join(F.broadcast(weights), "bucket")
+        .groupBy("doc_id", "source", "n_tokens")
+        .agg(*[F.sum(w).alias(out) for out, w in sums.items()])
+    )
+
+
+def dsir_score(docs: DataFrame, weights: DataFrame) -> DataFrame:
+    """Per-doc DSIR importance: the integer hashed-token sum over the
+    4096-row weight table (_hashed_token_sums).  Adds the deterministic
+    Gumbel resampling key: score + round(1e4 * -ln(-ln(u))) with u the
+    md5-of-string-id uniform (id-type-agnostic)."""
     # id-TYPE-agnostic uniform: md5 of the STRING form of doc_id → 32-bit
     # integer (the numeric Knuth form silently yields NULL keys on string
     # doc_ids — selection would then ignore the scores entirely); +0.5
@@ -3708,18 +3689,19 @@ def dsir_score(docs: DataFrame, weights: DataFrame) -> DataFrame:
         + F.lit(0.5)
     ) / F.lit(float(2**32))
     gumbel = F.round(F.lit(_DSIR_SCALE) * -F.log(-F.log(u)), 0).cast("long")
-    return (
-        ex.join(F.broadcast(weights), "bucket")
-        .groupBy("doc_id", "source", "n_tokens")
-        .agg(F.sum("weight").alias("dsir_score"))
-        .select(
-            "doc_id",
-            "source",
-            "n_tokens",
-            "dsir_score",
-            (F.col("dsir_score") + gumbel).alias("resample_key"),
-        )
+    return _hashed_token_sums(docs, weights, {"dsir_score": "weight"}).select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        "dsir_score",
+        (F.col("dsir_score") + gumbel).alias("resample_key"),
     )
+
+
+def _resample_top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k rows first in (resample_key DESC, doc_id ASC) order — the one
+    Gumbel-top-k cut every DSIR selection takes."""
+    return scored.orderBy(F.desc("resample_key"), F.asc("doc_id")).limit(k)
 
 
 def dsir_select(
@@ -3734,8 +3716,9 @@ def dsir_select(
     0-exchange TakeOrdered path (the t1_topk_orders precedent), so no full
     sort ever materializes.  At 10^12 docs k is large but the shape holds:
     per-partition top-k then a driver/tree merge of k-row frames."""
-    scored = dsir_score(corpus, dsir_weights(spark, target, raw_sample))
-    return scored.orderBy(F.desc("resample_key"), F.asc("doc_id")).limit(k)
+    return _resample_top_k(
+        dsir_score(corpus, dsir_weights(spark, target, raw_sample)), k
+    )
 
 
 def _dsir_sql_ctes(tgt: str, raws: str, corpus: str) -> str:
@@ -3838,15 +3821,9 @@ def train_corpus_dsir_outcomes(spark, sf_dir, k: int = 200) -> DataFrame:
     )
     kept = out.filter(F.col("outcome") == "kept")
     raw_sample = kept.filter(F.col("doc_id") % 29 == 2).select("doc_id", "text")
-    scored = dsir_score(
-        kept.select("doc_id", "source", "text"),
-        dsir_weights(spark, target, raw_sample),
-    )
-    topk = (
-        scored.orderBy(F.desc("resample_key"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.lit(True).alias("sel"))
-    )
+    topk = dsir_select(
+        spark, target, raw_sample, kept.select("doc_id", "source", "text"), k
+    ).select("doc_id", F.lit(True).alias("sel"))
     return out.join(topk, "doc_id", "left").select(
         "doc_id",
         "source",
@@ -3913,6 +3890,32 @@ _PQ_K = 4
 _PQ_DIMS = 64
 
 
+def _pq_fits(
+    emb: DataFrame, m: int, k: int, dims: int
+) -> list[tuple[DataFrame, DataFrame]]:
+    """One kmeans_fit per subspace (the dims // m slice i) → M (assigned,
+    centroids) pairs — the codebook fit pq_encode and pq_fit_sampled share."""
+    d_sub = dims // m
+    return [
+        kmeans_fit(
+            emb.select(
+                "vec_id",
+                F.slice("embedding", i * d_sub + 1, d_sub).alias("embedding"),
+            ),
+            k=k,
+        )
+        for i in range(m)
+    ]
+
+
+def _pq_code(i: int, d_sub: int) -> Column:
+    """Subspace i's code: the nearest codeword in packed column cb_i to the
+    slice of the double ``emb`` column."""
+    return _nearest_centroid(
+        F.col(f"cb_{i}"), F.slice(F.col("emb"), i * d_sub + 1, d_sub)
+    )
+
+
 def pq_encode(
     emb: DataFrame, m: int = _PQ_M, k: int = _PQ_K, dims: int = _PQ_DIMS
 ) -> tuple[DataFrame, list[DataFrame]]:
@@ -3923,13 +3926,8 @@ def pq_encode(
     equi-join on vec_id.  At production scale the codebooks are fit on a
     sample offline and the M argmins fuse into one map pass over one scan —
     the M-pass form here keeps the fit itself on-frame and oracle-checkable."""
-    d_sub = dims // m
     codes, cents = None, []
-    for i in range(m):
-        sub = emb.select(
-            "vec_id", F.slice("embedding", i * d_sub + 1, d_sub).alias("embedding")
-        )
-        assigned, c = kmeans_fit(sub, k=k)
+    for i, (assigned, c) in enumerate(_pq_fits(emb, m, k, dims)):
         ci = assigned.select("vec_id", F.col("cluster").alias(f"code_{i}"))
         codes = ci if codes is None else codes.join(ci, "vec_id")
         cents.append(c)
@@ -3945,42 +3943,16 @@ def pq_encode_fused(
     """Encode ALL M subspaces in ONE map pass over one corpus scan: the M
     codebooks pack into a single broadcast row (cb_0..cb_{m-1}, each an
     array<struct<cluster, c>>) and one projection emits every code via the
-    same row-local array_min argmin as kmeans_fit — code-for-code equal to
+    same _nearest_centroid argmin as kmeans_fit — code-for-code equal to
     pq_encode's M-pass form (differential test) but with zero vec_id joins
     and one scan instead of M.  This is the production encode shape
     pq_encode's docstring names; pq_encode remains the oracle-shaped
     reference (its per-subspace assignments fall out of the fits
     themselves).  A/B receipts: BENCH/ab_pq_r5.json."""
     d_sub = dims // m
-    packed = None
-    for i, c in enumerate(cents):
-        pi = c.agg(
-            F.collect_list(F.struct("cluster", F.col("emb").alias("c"))).alias(
-                f"cb_{i}"
-            )
-        )
-        packed = pi if packed is None else packed.crossJoin(pi)
-    e = emb.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
-
-    def code_col(i: int):
-        sub = F.slice(F.col("emb"), i * d_sub + 1, d_sub)
-        best = F.array_min(
-            F.transform(
-                F.col(f"cb_{i}"),
-                lambda ct: F.struct(
-                    (
-                        _dot(ct["c"], ct["c"]) - F.lit(2.0) * _dot(sub, ct["c"])
-                    ).alias("s"),
-                    ct["cluster"].alias("cluster"),
-                ),
-            )
-        )
-        return best["cluster"].alias(f"code_{i}")
-
-    return e.crossJoin(F.broadcast(packed)).select(
-        "vec_id", *[code_col(i) for i in range(m)]
+    packed = F.broadcast(_packed_codebooks(cents))
+    return _as_double_emb(emb).crossJoin(packed).select(
+        "vec_id", *[_pq_code(i, d_sub).alias(f"code_{i}") for i in range(m)]
     )
 
 
@@ -4026,14 +3998,6 @@ def _pq_adc_rank(
     # lineage appears once and the corpus pass computes each candidate's
     # code argmin AND its table lookup in one projection.
     q = emb.filter(F.col("vec_id") == 0)
-    packed = None
-    for i, c in enumerate(cents):
-        pi = c.agg(
-            F.collect_list(F.struct("cluster", F.col("emb").alias("c"))).alias(
-                f"cb_{i}"
-            )
-        )
-        packed = pi if packed is None else packed.crossJoin(pi)
     q_cols = [
         F.transform(
             F.slice("embedding", i * d_sub + 1, d_sub), lambda x: x.cast("double")
@@ -4050,7 +4014,8 @@ def _pq_adc_rank(
             )
         ).alias(f"t_{i}")
 
-    packed = packed.crossJoin(F.broadcast(q.select(*q_cols))).select(
+    packed = _packed_codebooks(cents).crossJoin(F.broadcast(q.select(*q_cols)))
+    packed = packed.select(
         *[t_col(i) for i in range(m)],
         *[F.col(f"cb_{i}") for i in range(m)],
     )
@@ -4061,29 +4026,12 @@ def _pq_adc_rank(
         # BEFORE any argmin or lookup.
         qc = F.broadcast(q.select(F.col(coarse).alias("q_coarse")))
         e = e.crossJoin(qc).filter(F.col(coarse) == F.col("q_coarse"))
-    e = e.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
-
-    def code_col(i: int):
-        sub = F.slice(F.col("emb"), i * d_sub + 1, d_sub)
-        return F.array_min(
-            F.transform(
-                F.col(f"cb_{i}"),
-                lambda ct: F.struct(
-                    (
-                        _dot(ct["c"], ct["c"]) - F.lit(2.0) * _dot(sub, ct["c"])
-                    ).alias("s"),
-                    ct["cluster"].alias("cluster"),
-                ),
-            )
-        )["cluster"]
-
-    score = F.element_at(F.col("t_0"), code_col(0))
+    score = F.element_at(F.col("t_0"), _pq_code(0, d_sub))
     for i in range(1, m):
-        score = score + F.element_at(F.col(f"t_{i}"), code_col(i))
+        score = score + F.element_at(F.col(f"t_{i}"), _pq_code(i, d_sub))
     return (
-        e.crossJoin(F.broadcast(packed))
+        _as_double_emb(e)
+        .crossJoin(F.broadcast(packed))
         .select("vec_id", score.alias("s"))
         .orderBy(F.desc("s"), "vec_id")
         .limit(n)
@@ -4091,47 +4039,73 @@ def _pq_adc_rank(
     )
 
 
-def _pq_sql(n: int = 10, coarse: str | None = None) -> str:
+def _pq_sql(
+    n: int = 10, coarse: str | None = None, sample_bp: int | None = None
+) -> str:
     """Oracle twin of pq_adc_topk over the embeddings table: M prefixed
     Lloyd chains on dim slices, per-subspace ADC tables from the final
     centroid CTEs, code joins, fixed-order sum, top-n; ``coarse`` adds the
-    IVF probe filter (candidates share the query's coarse cell)."""
+    IVF probe filter (candidates share the query's coarse cell).  With
+    ``sample_bp`` it is the twin of pq_fit_sampled + _pq_adc_rank: the
+    chains fit on the SAMPLE CTE, and a separate full-corpus assignment
+    (enc{i}) encodes EVERY vector against each chain's final centroids."""
     d_sub = _PQ_DIMS // _PQ_M
     parts, joins = [], []
+    if sample_bp is not None:
+        parts.append(
+            f"""samp AS (
+      SELECT vec_id, embedding FROM embeddings
+      WHERE ((vec_id % 2147483648) * {_KNUTH}) % 4294967296 % 10000
+            < {sample_bp})"""
+        )
+    fit_src = "embeddings" if sample_bp is None else "samp"
     for i in range(_PQ_M):
         lo, hi = i * d_sub + 1, (i + 1) * d_sub
+        cents, codes = f"s{i}c{_KMEANS_ITERS - 1}", f"s{i}a{_KMEANS_ITERS}"
         parts.append(
             f"sub{i} AS (SELECT vec_id, embedding[{lo}:{hi}] AS embedding "
-            f"FROM embeddings)"
+            f"FROM {fit_src})"
         )
         parts.append(
             _kmeans_sql_ctes(k=_PQ_K, dims=d_sub, src=f"sub{i}", prefix=f"s{i}")
         )
+        if sample_bp is not None:
+            codes = f"enc{i}"
+            parts.append(
+                f"""full{i} AS (
+      SELECT vec_id, list_transform(embedding[{lo}:{hi}], x -> x::DOUBLE) AS emb
+      FROM embeddings)"""
+            )
+            parts.append(_nearest_centroid_sql(codes, f"full{i}", cents))
         parts.append(
             f"q{i} AS (SELECT list_transform(embedding[{lo}:{hi}], "
             f"x -> x::DOUBLE) AS q FROM embeddings WHERE vec_id = 0)"
         )
         parts.append(
             f"t{i} AS (SELECT c.cluster, list_dot_product(c.emb, q.q) AS t "
-            f"FROM s{i}c{_KMEANS_ITERS - 1} c, q{i} q)"
+            f"FROM {cents} c, q{i} q)"
         )
         joins.append(
-            f"JOIN s{i}a{_KMEANS_ITERS} x{i} USING (vec_id) "
+            f"JOIN {codes} x{i} USING (vec_id) "
             f"JOIN t{i} ON t{i}.cluster = x{i}.cluster"
         )
     ctes = ",\n    ".join(parts)
     join_sql = "\n      ".join(joins)
-    probe = (
-        f"AND {coarse} = (SELECT {coarse} FROM embeddings WHERE vec_id = 0)"
-        if coarse
-        else ""
-    )
+    if sample_bp is None:
+        probe = (
+            f"AND {coarse} = (SELECT {coarse} FROM embeddings WHERE vec_id = 0)"
+            if coarse
+            else ""
+        )
+        cands = f"""(SELECT DISTINCT vec_id FROM embeddings
+            WHERE vec_id <> 0 {probe}) v"""
+    else:
+        cands = "(SELECT DISTINCT vec_id FROM embeddings WHERE vec_id <> 0) v"
     return f"""
     WITH {ctes},
     scored AS (
       SELECT v.vec_id, t0.t + t1.t + t2.t + t3.t AS s
-      FROM (SELECT DISTINCT vec_id FROM embeddings
-            WHERE vec_id <> 0 {probe}) v
+      FROM {cands}
       {join_sql}
     )
     SELECT vec_id, round(s, 6) AS pq_score FROM scored
@@ -4218,46 +4192,83 @@ def _avg_cost() -> Column:
     return F.expr("(lm_cost - pmod(lm_cost, n_pairs)) div n_pairs")
 
 
-def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
-    """Per-doc LM cost + CCNet bucket: fit the hashed-bigram model on
-    ``reference`` (two tiny groupBys → the A/C weight tables), score every
-    ``corpus`` doc as an integer pair-cost sum (explode pair keys → two
-    BROADCAST joins → one (doc_id, partial-sum) exchange), bucket by fixed
-    thresholds.  Every corpus doc appears: <2-token docs carry NULL
-    cost/avg and NULL bucket (the repetition_flags explicit-domain rule)."""
+def _lm_fit(
+    reference: DataFrame, group_col: str | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Fit the hashed-bigram LM on ``reference`` → its two weight tables:
+    A (b1, a_w = round(1e4·ln(c1 + B))) on a dense 4096-bucket spine, so
+    every bucket has a weight, and C (pk, c_w = round(1e4·ln(c2 + 1))) over
+    the seen bigram keys.  With ``group_col`` both tables also carry a
+    ``grp`` key, one model per distinct group (A's spine becomes groups ×
+    4096); without it the model is the pooled one-group case."""
+    grp = [] if group_col is None else [F.col(group_col).alias("grp")]
+    keys = [] if group_col is None else ["grp"]
     b = F.lit(_DSIR_BUCKETS)
-    ref_toks = reference.select(
-        F.explode(F.split(F.col("text"), " ")).alias("tok")
-    ).select(_dsir_bucket(F.col("tok")).alias("b1"))
-    a_table = (
-        corpus.sparkSession.range(_DSIR_BUCKETS)
-        .select(F.col("id").alias("b1"))
-        .join(ref_toks.groupBy("b1").agg(F.count("*").alias("c1")), "b1", "left")
-        .select(
-            "b1",
-            F.round(
-                F.lit(_DSIR_SCALE)
-                * F.log(F.coalesce(F.col("c1"), F.lit(0)) + b.cast("double"))
-            , 0).cast("long").alias("a_w"),
-        )
+    c1 = _dsir_token_counts(reference.select(*grp, "text"), *keys)
+    spine = reference.sparkSession.range(_DSIR_BUCKETS).select(
+        F.col("id").alias("bucket")
+    )
+    if group_col is not None:
+        spine = reference.select(*grp).distinct().crossJoin(spine)
+    a_table = spine.join(c1, [*keys, "bucket"], "left").select(
+        *keys,
+        F.col("bucket").alias("b1"),
+        F.round(
+            F.lit(_DSIR_SCALE)
+            * F.log(F.coalesce(F.col("c"), F.lit(0)) + b.cast("double"))
+        , 0).cast("long").alias("a_w"),
     )
     c_table = (
-        reference.select(F.explode(_lm_pair_keys()).alias("pk"))
-        .groupBy("pk")
+        reference.select(*grp, F.explode(_lm_pair_keys()).alias("pk"))
+        .groupBy(*keys, "pk")
         .agg(F.count("*").alias("c2"))
         .select(
+            *keys,
             "pk",
             F.round(
                 F.lit(_DSIR_SCALE) * F.log(F.col("c2") + F.lit(1).cast("double")), 0
             ).cast("long").alias("c_w"),
         )
     )
-    pairs = corpus.select("doc_id", F.explode(_lm_pair_keys()).alias("pk")).select(
-        "doc_id", "pk", F.floor(F.col("pk") / b).cast("long").alias("b1")
+    return a_table, c_table
+
+
+def _ppl_bucket(avg: Column) -> Column:
+    """CCNet bucket of an average pair cost by the fixed cutoffs: head,
+    middle or tail; NULL for an unscored (<2-token) doc."""
+    return (
+        F.when(avg < _LM_T_HEAD, "head")
+        .when(avg < _LM_T_MIDDLE, "middle")
+        .when(avg.isNotNull(), "tail")
+    )
+
+
+def _lm_score(
+    corpus: DataFrame,
+    a_table: DataFrame,
+    c_table: DataFrame,
+    group_col: str | None = None,
+) -> DataFrame:
+    """Score every ``corpus`` doc against _lm_fit's tables: integer
+    pair-cost sum (explode pair keys → two BROADCAST joins, on (grp, key)
+    when grouped → one (doc_id, partial-sum) exchange) and its bucket.
+    Every corpus doc appears: <2-token docs, and docs of a group without a
+    model, carry NULL cost/avg and NULL bucket (the repetition_flags
+    explicit-domain rule)."""
+    grp = [] if group_col is None else [F.col(group_col).alias("grp")]
+    keys = [] if group_col is None else ["grp"]
+    kept = [] if group_col is None else [F.col(group_col)]
+    pairs = corpus.select(
+        "doc_id", *grp, F.explode(_lm_pair_keys()).alias("pk")
+    ).select(
+        "doc_id",
+        *keys,
+        "pk",
+        F.floor(F.col("pk") / F.lit(_DSIR_BUCKETS)).cast("long").alias("b1"),
     )
     costs = (
-        pairs.join(F.broadcast(a_table), "b1")
-        .join(F.broadcast(c_table), "pk", "left")
+        pairs.join(F.broadcast(a_table), [*keys, "b1"])
+        .join(F.broadcast(c_table), [*keys, "pk"], "left")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_pairs"),
@@ -4266,20 +4277,26 @@ def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
     )
     avg = _avg_cost()
     return (
-        corpus.select("doc_id", "source")
+        corpus.select("doc_id", "source", *kept)
         .join(costs, "doc_id", "left")
         .select(
             "doc_id",
             "source",
+            *kept,
             "n_pairs",
             "lm_cost",
             avg.alias("avg_cost"),
-            F.when(avg < _LM_T_HEAD, "head")
-            .when(avg < _LM_T_MIDDLE, "middle")
-            .when(avg.isNotNull(), "tail")
-            .alias("ppl_bucket"),
+            _ppl_bucket(avg).alias("ppl_bucket"),
         )
     )
+
+
+def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
+    """Per-doc LM cost + CCNet bucket: fit the hashed-bigram model on
+    ``reference`` (two tiny groupBys → the A/C weight tables), score every
+    ``corpus`` doc as an integer pair-cost sum, bucket by fixed thresholds
+    (_lm_fit, _lm_score)."""
+    return _lm_score(corpus, *_lm_fit(reference))
 
 
 _LM_BUCKET_SQL = f"(('0x' || substr(md5(t), 1, 4))::BIGINT) % {_DSIR_BUCKETS}"
@@ -4508,11 +4525,8 @@ def dsir_select_threshold(
     if boundary is None:  # corpus smaller than k: everything is selected
         return bucketed.drop("kb")
     above = bucketed.filter(F.col("kb") > boundary).drop("kb")
-    edge = (
-        bucketed.filter(F.col("kb") == boundary)
-        .drop("kb")
-        .orderBy(F.desc("resample_key"), F.asc("doc_id"))
-        .limit(residual)
+    edge = _resample_top_k(
+        bucketed.filter(F.col("kb") == boundary).drop("kb"), residual
     )
     return above.unionByName(edge)
 
@@ -4538,84 +4552,8 @@ def pq_fit_sampled(
     sample_stratified discipline: no rand(), so task retries and re-runs
     fit IDENTICAL codebooks); encode everything with pq_encode_fused /
     _pq_adc_rank against these frames."""
-    keep = (
-        ((F.col("vec_id") % F.lit(2**31)) * F.lit(_KNUTH)) % F.lit(2**32)
-        % F.lit(10_000)
-        < F.lit(sample_bp)
-    )
-    sample = emb.filter(keep)
-    d_sub = dims // m
-    cents = []
-    for i in range(m):
-        sub = sample.select(
-            "vec_id", F.slice("embedding", i * d_sub + 1, d_sub).alias("embedding")
-        )
-        _, c = kmeans_fit(sub, k=k)
-        cents.append(c)
-    return cents
-
-
-def _pq_sampled_sql(n: int = 10, sample_bp: int = 2_500) -> str:
-    """Oracle twin of pq_fit_sampled + _pq_adc_rank: the Lloyd chains fit
-    on the SAMPLE CTE, a separate full-corpus assignment (enc{i}) encodes
-    EVERY vector against each chain's final centroids, then the usual ADC
-    tables/join/top-n."""
-    d_sub = _PQ_DIMS // _PQ_M
-    parts, joins = [], []
-    parts.append(
-        f"""samp AS (
-      SELECT vec_id, embedding FROM embeddings
-      WHERE ((vec_id % 2147483648) * {_KNUTH}) % 4294967296 % 10000
-            < {sample_bp})"""
-    )
-    for i in range(_PQ_M):
-        lo, hi = i * d_sub + 1, (i + 1) * d_sub
-        parts.append(
-            f"sub{i} AS (SELECT vec_id, embedding[{lo}:{hi}] AS embedding "
-            f"FROM samp)"
-        )
-        parts.append(
-            _kmeans_sql_ctes(k=_PQ_K, dims=d_sub, src=f"sub{i}", prefix=f"s{i}")
-        )
-        parts.append(
-            f"""full{i} AS (
-      SELECT vec_id, list_transform(embedding[{lo}:{hi}], x -> x::DOUBLE) AS emb
-      FROM embeddings)"""
-        )
-        parts.append(
-            f"""enc{i} AS (
-      SELECT vec_id, cluster FROM (
-        SELECT e.vec_id, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_dot_product(c.emb, c.emb)
-                          - 2 * list_dot_product(e.emb, c.emb),
-                          c.cluster) AS rn
-        FROM full{i} e, s{i}c{_KMEANS_ITERS - 1} c) WHERE rn = 1)"""
-        )
-        parts.append(
-            f"q{i} AS (SELECT list_transform(embedding[{lo}:{hi}], "
-            f"x -> x::DOUBLE) AS q FROM embeddings WHERE vec_id = 0)"
-        )
-        parts.append(
-            f"t{i} AS (SELECT c.cluster, list_dot_product(c.emb, q.q) AS t "
-            f"FROM s{i}c{_KMEANS_ITERS - 1} c, q{i} q)"
-        )
-        joins.append(
-            f"JOIN enc{i} x{i} USING (vec_id) "
-            f"JOIN t{i} ON t{i}.cluster = x{i}.cluster"
-        )
-    ctes = ",\n    ".join(parts)
-    join_sql = "\n      ".join(joins)
-    return f"""
-    WITH {ctes},
-    scored AS (
-      SELECT v.vec_id, t0.t + t1.t + t2.t + t3.t AS s
-      FROM (SELECT DISTINCT vec_id FROM embeddings WHERE vec_id <> 0) v
-      {join_sql}
-    )
-    SELECT vec_id, round(s, 6) AS pq_score FROM scored
-    ORDER BY s DESC, vec_id LIMIT {n}
-    """
+    keep = _knuth_full(F.col("vec_id")) % F.lit(10_000) < F.lit(sample_bp)
+    return [c for _, c in _pq_fits(emb.filter(keep), m, k, dims)]
 
 
 @_local_q(
@@ -4623,7 +4561,7 @@ def _pq_sampled_sql(n: int = 10, sample_bp: int = 2_500) -> str:
     "similarity search — PQ/ADC with codebooks fit on a deterministic "
     "Knuth-hash 25% sample (the production fit path: codebooks describe "
     "the space, not the corpus), every vector encoded and ADC-ranked",
-    _pq_sampled_sql(),
+    _pq_sql(sample_bp=2_500),
 )
 def sim_pq_sampled_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir)
@@ -4650,30 +4588,15 @@ def dsir_scores_multi(
             "weight", f"w_{name}"
         )
         merged = w if merged is None else merged.join(w, "bucket")
-    toks = F.split(F.col("text"), " ")
-    ex = corpus.select(
-        "doc_id", "source", F.size(toks).alias("n_tokens"), F.explode(toks).alias("tok")
-    ).select(
-        "doc_id", "source", "n_tokens", _dsir_bucket(F.col("tok")).alias("bucket")
+    agg = _hashed_token_sums(
+        corpus, merged, {f"score_{n}": f"w_{n}" for n in names}
     )
-    agg = (
-        ex.join(F.broadcast(merged), "bucket")
-        .groupBy("doc_id", "source", "n_tokens")
-        .agg(*[F.sum(f"w_{n}").alias(f"score_{n}") for n in names])
-    )
-    best = None
-    for n in names:
-        cond = F.lit(True)
-        for o in names:
-            if o != n:
-                # strict for earlier domains, >= for later → first wins ties
-                op = (
-                    F.col(f"score_{n}") >= F.col(f"score_{o}")
-                    if names.index(o) > names.index(n)
-                    else F.col(f"score_{n}") > F.col(f"score_{o}")
-                )
-                cond = cond & op
-        best = F.when(cond, n) if best is None else best.when(cond, n)
+    # the first domain holding the top score wins ties (CASE order)
+    scores = [F.col(f"score_{n}") for n in names]
+    top = F.greatest(*scores) if len(scores) > 1 else scores[0]
+    best = F.when(scores[0] == top, names[0])
+    for n, score in zip(names[1:], scores[1:]):
+        best = best.when(score == top, n)
     return agg.withColumn("best_domain", best)
 
 
@@ -4761,70 +4684,8 @@ def lm_perplexity_grouped(
     the groups' seen bigrams), still one corpus-side exchange.  Buckets
     use the shared cutoffs; production CCNet derives per-language cutoffs
     the same way the shared ones were derived (COVERAGE.md)."""
-    b = F.lit(_DSIR_BUCKETS)
-    spark = corpus.sparkSession
-    ref_toks = reference.select(
-        F.col(group_col).alias("grp"),
-        F.explode(F.split(F.col("text"), " ")).alias("tok"),
-    ).select("grp", _dsir_bucket(F.col("tok")).alias("b1"))
-    c1 = ref_toks.groupBy("grp", "b1").agg(F.count("*").alias("c1"))
-    spine = (
-        reference.select(F.col(group_col).alias("grp"))
-        .distinct()
-        .crossJoin(spark.range(_DSIR_BUCKETS).select(F.col("id").alias("b1")))
-    )
-    a_table = spine.join(c1, ["grp", "b1"], "left").select(
-        "grp",
-        "b1",
-        F.round(
-            F.lit(_DSIR_SCALE)
-            * F.log(F.coalesce(F.col("c1"), F.lit(0)) + b.cast("double"))
-        , 0).cast("long").alias("a_w"),
-    )
-    c_table = (
-        reference.select(
-            F.col(group_col).alias("grp"), F.explode(_lm_pair_keys()).alias("pk")
-        )
-        .groupBy("grp", "pk")
-        .agg(F.count("*").alias("c2"))
-        .select(
-            "grp",
-            "pk",
-            F.round(
-                F.lit(_DSIR_SCALE) * F.log(F.col("c2") + F.lit(1).cast("double")), 0
-            ).cast("long").alias("c_w"),
-        )
-    )
-    pairs = corpus.select(
-        "doc_id", F.col(group_col).alias("grp"), F.explode(_lm_pair_keys()).alias("pk")
-    ).select(
-        "doc_id", "grp", "pk", F.floor(F.col("pk") / b).cast("long").alias("b1")
-    )
-    costs = (
-        pairs.join(F.broadcast(a_table), ["grp", "b1"])
-        .join(F.broadcast(c_table), ["grp", "pk"], "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_pairs"),
-            F.sum(F.col("a_w") - F.coalesce(F.col("c_w"), F.lit(0))).alias("lm_cost"),
-        )
-    )
-    avg = _avg_cost()
-    return (
-        corpus.select("doc_id", "source", F.col(group_col))
-        .join(costs, "doc_id", "left")
-        .select(
-            "doc_id",
-            "source",
-            F.col(group_col),
-            "n_pairs",
-            "lm_cost",
-            avg.alias("avg_cost"),
-            F.when(avg < _LM_T_HEAD, "head")
-            .when(avg < _LM_T_MIDDLE, "middle")
-            .when(avg.isNotNull(), "tail")
-            .alias("ppl_bucket"),
-        )
+    return _lm_score(
+        corpus, *_lm_fit(reference, group_col), group_col=group_col
     )
 
 
@@ -4890,7 +4751,7 @@ def text_lm_perplexity_by_lang(spark, sf_dir):
     pd_ = d.withColumn("pred", langid_pred_col())
     return lm_perplexity_grouped(
         pd_, pd_.filter(F.col("doc_id") % 31 == 3), group_col="pred"
-    ).withColumnRenamed("grp", "pred")
+    )
 
 def lm_weight_maps(reference: DataFrame) -> DataFrame:
     """The lm_perplexity model packed as ONE row of two maps — a_map
@@ -4901,38 +4762,12 @@ def lm_weight_maps(reference: DataFrame) -> DataFrame:
     join and NO aggregation state: it runs inside a scan, batch or
     STREAMING (where the per-doc sum of the join form would be a stateful
     streaming aggregation)."""
-    b = F.lit(_DSIR_BUCKETS)
-    ref_toks = reference.select(
-        F.explode(F.split(F.col("text"), " ")).alias("tok")
-    ).select(_dsir_bucket(F.col("tok")).alias("b1"))
-    a_row = (
-        reference.sparkSession.range(_DSIR_BUCKETS)
-        .select(F.col("id").alias("b1"))
-        .join(ref_toks.groupBy("b1").agg(F.count("*").alias("c1")), "b1", "left")
-        .select(
-            "b1",
-            F.round(
-                F.lit(_DSIR_SCALE)
-                * F.log(F.coalesce(F.col("c1"), F.lit(0)) + b.cast("double"))
-            , 0).cast("long").alias("a_w"),
-        )
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("b1", "a_w"))).alias("a_map")
-        )
+    a_table, c_table = _lm_fit(reference)
+    a_row = a_table.agg(
+        F.map_from_entries(F.collect_list(F.struct("b1", "a_w"))).alias("a_map")
     )
-    c_row = (
-        reference.select(F.explode(_lm_pair_keys()).alias("pk"))
-        .groupBy("pk")
-        .agg(F.count("*").alias("c2"))
-        .select(
-            "pk",
-            F.round(
-                F.lit(_DSIR_SCALE) * F.log(F.col("c2") + F.lit(1).cast("double")), 0
-            ).cast("long").alias("c_w"),
-        )
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("pk", "c_w"))).alias("c_map")
-        )
+    c_row = c_table.agg(
+        F.map_from_entries(F.collect_list(F.struct("pk", "c_w"))).alias("c_map")
     )
     return a_row.crossJoin(c_row)
 
@@ -4977,9 +4812,6 @@ def lm_perplexity_maps(docs: DataFrame, weight_maps: DataFrame) -> DataFrame:
             "n_pairs",
             "lm_cost",
             avg.alias("avg_cost"),
-            F.when(avg < _LM_T_HEAD, "head")
-            .when(avg < _LM_T_MIDDLE, "middle")
-            .when(avg.isNotNull(), "tail")
-            .alias("ppl_bucket"),
+            _ppl_bucket(avg).alias("ppl_bucket"),
         )
     )

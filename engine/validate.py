@@ -99,7 +99,7 @@ def audit_media_vs_pixels(spine: DataFrame, blobs: DataFrame) -> DataFrame:
     layout, and diff against what the spine claims for that media span.
 
     Catches anything that corrupted the claimed extraction after (or
-    despite) decode: a bad resume mixing spine versions, a salted path
+    despite) decode: a bad resume mixing spine versions, a re-nest
     dropping rows, sink corruption, or a routing regression — because the
     verdict is derived from the source raster again, not trusted from the
     struct under audit.

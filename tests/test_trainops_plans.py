@@ -1114,26 +1114,6 @@ def test_quality_model_plan_is_exchange_free_and_deterministic(spark):
     assert {v[1] for v in first.values()} == {True, False}  # discriminates
 
 
-def test_quality_model_join_matches_closed_form(spark):
-    """The broadcast (bucket → weight) join form — the deployment shape of a
-    LEARNED model — must score doc-for-doc identically to the shipped
-    closed-form expression, broadcast the weight table, and keep the corpus
-    side exchange-free up to the join (exactly one exchange total: the
-    per-doc re-aggregation of partial sums)."""
-    docs = trainops.load(spark, SF_DIR, "documents")
-    weights = trainops.quality_model_weights(spark)
-    a = trainops.quality_model_score(docs)
-    b = trainops.quality_model_score_join(docs, weights)
-    assert a.schema == b.schema
-    assert a.exceptAll(b).union(b.exceptAll(a)).count() == 0
-
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan[:1500]
-    for bad in _FORBIDDEN:
-        assert bad not in plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan[:1500]
-
-
 def test_dsir_steers_toward_target_vocab(spark):
     """DSIR ground truth on a planted corpus: target docs speak vocabulary A,
     the raw sample speaks vocabulary B — corpus docs written in A must
@@ -1461,17 +1441,25 @@ def test_lm_grouped_scores_against_own_groups_model(spark):
 
 
 def test_lm_maps_form_matches_join_form(spark):
-    """The packed-map LM scorer (the streaming-front form) must produce
-    cost-for-cost identical rows to the broadcast-join form on the real
-    documents table, and its doc side must be exchange-free (one broadcast
-    crossJoin of the 1-row maps frame, no explode/join/agg)."""
+    """The pooled LM is the one-group case of the grouped LM, and the
+    packed-map LM scorer (the streaming-front form) scores from the same
+    fit: all three must produce cost-for-cost identical rows on the real
+    documents table, and the maps form's doc side must be exchange-free
+    (one broadcast crossJoin of the 1-row maps frame, no explode/join/agg)."""
+    F = trainops.F
     d = trainops.load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
-    ref = d.filter((trainops.F.col("doc_id") % 31) == 3)
+    ref = d.filter((F.col("doc_id") % 31) == 3)
     join_form = trainops.lm_perplexity(d, ref)
     maps_form = trainops.lm_perplexity_maps(d, trainops.lm_weight_maps(ref))
+    one = F.lit("all").alias("g")
+    grouped = trainops.lm_perplexity_grouped(
+        d.select("*", one), ref.select("*", one), group_col="g"
+    ).drop("g")
     a = {tuple(r) for r in join_form.collect()}
     b = {tuple(r) for r in maps_form.collect()}
-    assert a == b and len(a) > 0
+    c = {tuple(r) for r in grouped.collect()}
+    assert a == b == c and len(a) > 0
+    assert {"head", "middle", "tail"} <= {r[-1] for r in a}
     plan = maps_form._jdf.queryExecution().executedPlan().toString()
     # doc side: no hash exchange (the tiny map-fit subtree has its own)
     assert "Exchange hashpartitioning(doc_id" not in plan
